@@ -1586,8 +1586,10 @@ object DeltaRead {
     * here would ship a full Row object + the repeated file-path string
     * per matched row (~20× the bytes) and OOM the driver long before
     * the cap fired. The cap itself is BYTES of index payload
-    * ([[DeletionVectors.maxDeletedRows]] × 8 — checked BEFORE the
-    * collect, from a count-only aggregate).
+    * ([[DeletionVectors.maxDeletedRows]] × 8), checked AFTER the
+    * collect on the collected sizes: the collect itself relies on
+    * `spark.driver.maxResultSize` to stop a pathological DELETE before
+    * the driver is at risk.
     */
   private[sources] def matchedPhysicalRows(spark: SparkSession, path: String,
                                            snap: Snapshot,

@@ -6,26 +6,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, expr, lit}
 
-/** Native Delta Lake WRITER — the last reference capability graft
-  * lacked (drune's merge sinks write through `DeltaTable`, reference:
-  * src/drune/engines/spark/steps/writer.py:40-100). The delta-spark
-  * connector is not on this build's classpath, so this implements the
-  * PUBLIC transaction-log protocol (github.com/delta-io/delta
+/** Native Delta Lake WRITER (drune's merge sinks write through
+  * `DeltaTable`, reference: src/drune/engines/spark/steps/writer.py:40-100).
+  * The delta-spark connector is not on this build's classpath, so this
+  * implements the PUBLIC transaction-log protocol (github.com/delta-io/delta
   * PROTOCOL.md) directly, the write-side mirror of [[DeltaRead]]:
   *
   *  - data lands as ordinary parquet files written by Spark's own
   *    distributed writer into a hidden staging dir, then renamed into
   *    the table (file moves are metadata ops; renames never copy);
-  *  - the commit is ONE atomic `_delta_log/NNNNNNNNNNNNNNNNNNNN.json`
-  *    holding the complete action list (`protocol`+`metaData` at v0,
-  *    `add` per new file, `remove` per replaced file, `commitInfo`),
-  *    published through the same hard-link/rename CAS primitive as
-  *    graft's own manifest protocol ([[graft.pipeline.VersionedTable
-  *    .casPublish]]) — concurrent writers serialize exactly like
-  *    delta-spark's optimistic commit loop: the loser re-reads the
-  *    winner's snapshot, recomputes its remove set, and retries the
-  *    SAME already-written data files at the next version (losing a
-  *    race never re-runs the data job);
+  *  - every commit — append, overwrite, DML, ALTER, property and
+  *    domain changes, OPTIMIZE, RESTORE — goes through ONE commit path,
+  *    [[DeltaTxn.commit]]: the operation's body turns the attempt's
+  *    snapshot into typed actions (one serializer writes them), and the
+  *    loop re-runs the writer gate ([[requireWritable]]) on every
+  *    attempt's snapshot, publishes ONE atomic
+  *    `_delta_log/NNNNNNNNNNNNNNNNNNNN.json` through the hard-link/rename
+  *    CAS primitive graft's manifest protocol uses
+  *    ([[graft.pipeline.VersionedTable.casPublish]]), checkpoints at the
+  *    table's cadence, and after a lost race re-reads the winner's
+  *    snapshot and retries — at most [[DeltaTxn.MaxAttempts]] (20)
+  *    attempts. Appends, overwrites and compactions retry the SAME
+  *    already-written data files (losing a race never re-runs their
+  *    data job); DML whose data depends on the snapshot it read deletes
+  *    its staged files and re-derives;
   *  - `add.path` entries are RFC-2396 percent-encoded relative URIs
   *    and partition values travel in `partitionValues` (decoded from
   *    the hive-escaped directory names Spark's writer produced) —
@@ -37,25 +41,25 @@ import org.apache.spark.sql.functions.{col, expr, lit}
   * overwrite (removes only the partitions the new data touches),
   * idempotent streaming appends ([[appendStream]], `txn` actions),
   * FILE-PRUNED [[merge]] (per-file stats classify; untouched adds
-  * carry by absence of a remove), DV-emitting [[delete]], and
-  * append/DML into name-mode column-mapped tables (physical-name
-  * writes). Adds carry footer-derived `stats`
-  * (data skipping for any delta reader, including [[DeltaRead]]'s
-  * own [[org.apache.spark.sql.graftbridge.StatsManifestFileIndex]]
-  * scan), and the log folds into parquet CHECKPOINTS + a
-  * `_last_checkpoint` pointer every [[CheckpointInterval]] commits
-  * ([[checkpoint]] — incremental construction, tombstone carry-over,
-  * txn survival).
+  * carry by absence of a remove), DV-emitting [[delete]] and
+  * [[update]], and append/DML into column-mapped tables
+  * (physical-name writes). Adds carry footer-derived `stats` (data
+  * skipping for any delta reader, including [[DeltaRead]]'s own
+  * [[org.apache.spark.sql.graftbridge.StatsManifestFileIndex]] scan),
+  * and the log folds into parquet CHECKPOINTS + a `_last_checkpoint`
+  * pointer every [[CheckpointInterval]] commits ([[checkpoint]] —
+  * incremental construction, tombstone carry-over, txn survival).
   *
   * Scale: the data write is Spark's normal distributed parquet job
   * (partitioned layout, codegen, AQE all apply); driver work is
   * O(files touched this commit) for the log line plus O(live files)
   * once per commit to know the remove set / validate schema — the
-  * same residency delta-spark's OptimisticTransaction holds. Failed
-  * writers leave only unreferenced staging files (invisible to every
-  * reader; a vacuum sweep can reclaim them).
+  * same residency delta-spark's OptimisticTransaction holds. Writers
+  * that fail before publishing leave only unreferenced staging files
+  * (invisible to every reader; a vacuum sweep can reclaim them).
   */
 object DeltaWrite {
+  import DeltaTxn._
 
   private val mapper = new ObjectMapper()
 
@@ -111,25 +115,6 @@ object DeltaWrite {
       txn = Some((appId, batchVersion)))
   }
 
-  /** DV-EMITTING DELETE — delta-spark's modern DELETE shape: instead
-    * of rewriting every touched file, each file's matching PHYSICAL
-    * row indexes union into its deletion vector and the commit is
-    * remove(F, oldDv) + add(F, newDv) pairs — O(deleted rows) log
-    * bytes, ZERO data-file I/O. The new bitmap inlines into the log
-    * ("i") up to `inlineMaxBytes` serialized, else lands as an on-disk
-    * "u" DV file with the protocol's framing. First DV on a table
-    * upgrades the protocol to v3, CARRYING every existing feature
-    * (legacy writer versions expand to their implied feature names —
-    * clobbering a feature would break other writers' enforcement).
-    *
-    * Returns the committed version; a no-match (or all-matches-
-    * already-deleted) delete commits nothing and returns the current
-    * version. CAS losers retry against the winner's DVs; a competitor
-    * rewriting a target file aborts loudly (its row indexes no longer
-    * address the same physical rows). Losers' staged "u" DV files are
-    * unreferenced and vacuum-reclaimable, like staged data files.
-    */
-
   /** Per-file deletion-vector union for a row-matching DML (DELETE /
     * UPDATE): each touched file's existing DV rows union with the
     * newly matched indexes; a file already covering every match drops
@@ -166,74 +151,91 @@ object DeltaWrite {
       }
     }
 
+  /** DV-EMITTING DELETE — delta-spark's modern DELETE shape: instead
+    * of rewriting every touched file, each file's matching PHYSICAL
+    * row indexes union into its deletion vector and the commit is
+    * remove(F, oldDv) + add(F, newDv) pairs — O(deleted rows) log
+    * bytes, ZERO data-file I/O. The new bitmap inlines into the log
+    * ("i") up to `inlineMaxBytes` serialized, else lands as an on-disk
+    * "u" DV file with the protocol's framing. First DV on a table
+    * upgrades the protocol to v3, CARRYING every existing feature
+    * (legacy writer versions expand to their implied feature names —
+    * clobbering a feature would break other writers' enforcement).
+    *
+    * Returns the committed version; a no-match (or all-matches-
+    * already-deleted) delete commits nothing and returns the current
+    * version. CAS losers retry against the winner's DVs; a competitor
+    * rewriting a target file aborts loudly (its row indexes no longer
+    * address the same physical rows). Losers' staged "u" DV files are
+    * unreferenced and vacuum-reclaimable, like staged data files.
+    */
   def delete(spark: SparkSession, path: String, condition: String,
              inlineMaxBytes: Int = 262144): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var snap = DeltaRead.snapshot(spark, rootP.toString)
+    val snap0 = DeltaRead.snapshot(spark, rootP.toString)
     // column-mapped tables work: the scan surfaces LOGICAL names (the
-    // condition's namespace) and the commit re-serializes each file's
-    // partitionValues back under PHYSICAL keys (deleteContent)
-    requireWritable(snap, path, removesData = true, cdfHandled = true)
-    val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
-    if (matched.isEmpty) return snap.version
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    // condition's namespace) and the commit re-adds each file under
+    // PHYSICAL partition keys ([[DeltaTxn.reAdd]])
+    requireWritable(snap0, path, removesData = true, cdfHandled = true)
+    val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap0, condition)
+    if (matched.isEmpty) return snap0.version
+    commit(spark, path, "DELETE", snap0, removesData = true, cdfHandled = true) { snap =>
       val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
         inlineMaxBytes, "DELETE", path)
-      if (updates.isEmpty) return snap.version
-      // CHANGE DATA FEED: the deleted rows (live rows matching the
-      // predicate under THIS attempt's snapshot DVs — already-dead rows
-      // never re-appear as changes) land under _change_data/ per CAS
-      // attempt: a concurrent DV-only DELETE that won the race may have
-      // deleted an overlapping subset of the same files, and cdc rows
-      // staged against the stale snapshot would report those rows
-      // deleted twice to feed consumers. A lost race deletes the stale
-      // staged files below and re-derives, mirroring [[update]].
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          val touched = matched.keySet
-          val tSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-          // rowTracking tables: the change rows carry their RETIRED ids
-          // ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF read can
-          // surface them — a delete's ids are always attributable (the
-          // rows' files and baseRowIds are unchanged)
-          val withIds = snap.minWriter >= 7 &&
-            snap.writerFeatures.contains("rowTracking") &&
-            touched.forall(snap.rowIds.contains)
-          val delRows = (if (withIds)
-              DeltaRead.readSnapshotRowIds(spark, rootP.toString, tSnap,
-                DeltaRead.CdcRowIdCol)
-            else DeltaRead.readSnapshot(spark, rootP.toString, tSnap))
-            .where(condition)
-            .withColumn("_change_type", lit("delete"))
-          // `updates` non-empty ⟹ some matched row index is not in its
-          // file's old DV ⟹ at least one LIVE row matches `condition`
-          // ⟹ delRows is non-empty — the old isEmpty probe re-ran the
-          // whole matched scan as its own job to learn that (r19,
-          // guide §1.2)
-          writeCdcFiles(spark, snap, delRows, rootP, fs)
-        }
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            deleteContent(snap, updates, condition, cdcFiles),
-            snap.configuration, Some(snap))) return next
-      cdcFiles.foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      // a table setting or protocol feature committed between attempts
-      // (delta.appendOnly, an unknown writer feature) must re-gate the
-      // retry — mirroring [[update]]'s per-attempt validation
-      requireWritable(snap, path, removesData = true, cdfHandled = true)
+      if (updates.isEmpty) NoOp(snap.version)
+      else {
+        // CHANGE DATA FEED: the deleted rows (live rows matching the
+        // predicate under THIS attempt's snapshot DVs — already-dead rows
+        // never re-appear as changes) land under _change_data/ per CAS
+        // attempt: a concurrent DV-only DELETE that won the race may have
+        // deleted an overlapping subset of the same files, and cdc rows
+        // staged against the stale snapshot would report those rows
+        // deleted twice to feed consumers. A lost race deletes the stale
+        // staged files and re-derives, mirroring [[update]].
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            val touched = matched.keySet
+            val tSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
+            // rowTracking tables: the change rows carry their RETIRED ids
+            // ([[DeltaRead.CdcRowIdCol]]) so the id-keyed CDF read can
+            // surface them — a delete's ids are always attributable (the
+            // rows' files and baseRowIds are unchanged)
+            val withIds = snap.minWriter >= 7 &&
+              snap.writerFeatures.contains("rowTracking") &&
+              touched.forall(snap.rowIds.contains)
+            val delRows = (if (withIds)
+                DeltaRead.readSnapshotRowIds(spark, rootP.toString, tSnap,
+                  DeltaRead.CdcRowIdCol)
+              else DeltaRead.readSnapshot(spark, rootP.toString, tSnap))
+              .where(condition)
+              .withColumn("_change_type", lit("delete"))
+            // `updates` non-empty ⟹ some matched row index is not in its
+            // file's old DV ⟹ at least one LIVE row matches `condition`
+            // ⟹ delRows is non-empty — no isEmpty probe job needed
+            writeCdcFiles(spark, snap, delRows, rootP, fs)
+          }
+        Commit(CommitInfo("DELETE", Seq("predicate" -> condition)) +:
+          dvActions(snap, updates, cdcFiles), cdcFiles, reclaimOnLoss = true)
+      }
     }
-    throw new IllegalStateException(
-      s"DELETE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
+
+  /** The DV half of a row-matching DML commit (DELETE / UPDATE): the
+    * protocol upgrade a first DV needs, the cdc actions, and per
+    * touched file remove(F, oldDv) + add(F, newDv) — remove-only when
+    * the new DV covers every row.
+    */
+  private def dvActions(snap: DeltaRead.Snapshot,
+                        updates: Seq[(String, Option[DeletionVectors.Descriptor],
+                          DeletionVectors.Descriptor)],
+                        cdcFiles: Seq[NewFile]): Seq[Action] =
+    protocolAction(snap, Set("deletionVectors")).toSeq ++ cdcFiles.map(cdcOf) ++
+      updates.flatMap { case (rel, oldDv, newDv) =>
+        Remove(rel, dataChange = true, oldDv) +:
+          Option(newDv).map(d => reAdd(snap, rel, dataChange = true, Some(d))).toSeq
+      }
 
   /** DV-BASED UPDATE … SET … WHERE — delta-spark's DV-enabled UPDATE
     * shape (reference behavior: drune exposes row updates only through
@@ -257,181 +259,109 @@ object DeltaWrite {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var snap = DeltaRead.snapshot(spark, rootP.toString)
-    requireWritable(snap, path, removesData = true, cdfHandled = true)
+    val snap0 = DeltaRead.snapshot(spark, rootP.toString)
+    requireWritable(snap0, path, removesData = true, cdfHandled = true)
     assignments.keys.foreach(c => require(
-      snap.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+      snap0.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
       s"UPDATE at $path: SET targets unknown column '$c' " +
-        s"(table columns: ${snap.schema.fieldNames.mkString(", ")})"))
+        s"(table columns: ${snap0.schema.fieldNames.mkString(", ")})"))
     // identity columns never update (delta-spark's posture, BY DEFAULT
     // included): a SET could push values past the high-water mark with
     // no bump, and later appends would allocate colliding values
-    identitiesOf(snap).foreach(id => require(
+    identitiesOf(snap0).foreach(id => require(
       !assignments.keys.exists(_.equalsIgnoreCase(id.name)),
       s"UPDATE at $path: SET targets identity column '${id.name}' — updating " +
         "identity values breaks the protocol's collision-freedom contract " +
         "(delta-spark refuses this too)"))
     val byLower = assignments.map { case (k, v) => k.toLowerCase -> v }
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
+    commit(spark, path, "UPDATE", snap0, removesData = true, cdfHandled = true) { snap =>
       val matched = DeltaRead.matchedPhysicalRows(spark, rootP.toString, snap, condition)
-      if (matched.isEmpty) return snap.version
+      // no match, or every match already deleted
       val updates = dvUnionUpdates(spark, snap, fs, rootP, matched,
         inlineMaxBytes, "UPDATE", path)
-      if (updates.isEmpty) return snap.version // every match already deleted
-      val touched = matched.keySet
-      // ROW-ID MATERIALIZATION (round 18): on a table declaring a
-      // materialized row-id column, UPDATE's postimage files carry each
-      // updated row's CURRENT id in the hidden column — an update moves
-      // a row to a new file but must not re-key it (delta-spark's
-      // stable-id contract; same machinery as compact/merge). The
-      // soft-deleted originals' files keep their baseRowId, so unmatched
-      // rows' ids never move either way.
-      val matName: Option[String] =
-        if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
-            touched.forall(snap.rowIds.contains))
-          snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
-            .filterNot(m => snap.schema.fieldNames.contains(m) ||
-              snap.colMap.values.exists(_ == m))
-        else None
-      val touchedSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
-      // MATCHED-ROW MATERIALIZATION (r19, guide §1.2/§5): on CDF
-      // tables the matched live rows feed THREE sub-plans — the
-      // rewritten images' data write, the cdc preimages and the cdc
-      // postimages — and each used to re-scan the touched parquet
-      // files. The matched set is DV-budget-bounded (delta-sized,
-      // never table-sized), so persist it for the attempt; spill beats
-      // a triple rescan. Without CDF there is ONE consumer (the data
-      // write) and the persist would be pure overhead — skipped.
-      // Released in the finally — a lost CAS recomputes from the
-      // winner's snapshot.
-      val updCdf = cdfEnabled(snap)
-      val liveMatched0 = (matName match {
-        case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
-        case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
-      }).where(condition)
-      val liveMatched =
-        if (updCdf)
-          liveMatched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else liveMatched0
-      try {
-      val assigned = liveMatched.select((snap.schema.fields.map { f =>
-        byLower.get(f.name.toLowerCase)
-          .map(e => expr(e).cast(f.dataType).as(f.name))
-          .getOrElse(col(s"`${f.name}`"))
-      } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
-      // generated columns RECOMPUTE from the post-update row unless the
-      // statement assigned them explicitly — only the ASSIGNED ones
-      // validate (a recomputed column equals its expression by
-      // construction; re-checking it would cost a pass per column)
-      val gens = generatedOf(snap)
-      val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
-        if (byLower.contains(name.toLowerCase)) {
-          validateGenerated(snap, d, name, e, path, "UPDATE"); d
+      if (updates.isEmpty) NoOp(snap.version)
+      else {
+        val touched = matched.keySet
+        // ROW-ID MATERIALIZATION (round 18): on a table declaring a
+        // materialized row-id column, UPDATE's postimage files carry each
+        // updated row's CURRENT id in the hidden column — an update moves
+        // a row to a new file but must not re-key it (delta-spark's
+        // stable-id contract; same machinery as compact/merge). The
+        // soft-deleted originals' files keep their baseRowId, so unmatched
+        // rows' ids never move either way.
+        val matName: Option[String] =
+          if (snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking") &&
+              touched.forall(snap.rowIds.contains))
+            snap.configuration.get("delta.rowTracking.materializedRowIdColumnName")
+              .filterNot(m => snap.schema.fieldNames.contains(m) ||
+                snap.colMap.values.exists(_ == m))
+          else None
+        val touchedSnap = snap.copy(files = snap.files.filter(kv => touched.contains(kv._1)))
+        // MATCHED-ROW MATERIALIZATION (r19, guide §1.2/§5): on CDF
+        // tables the matched live rows feed THREE sub-plans — the
+        // rewritten images' data write, the cdc preimages and the cdc
+        // postimages — and each used to re-scan the touched parquet
+        // files. The matched set is DV-budget-bounded (delta-sized,
+        // never table-sized), so persist it for the attempt; spill beats
+        // a triple rescan. Without CDF there is ONE consumer (the data
+        // write) and the persist would be pure overhead — skipped.
+        // Released once the attempt's files are written — a lost CAS
+        // recomputes from the winner's snapshot.
+        val updCdf = cdfEnabled(snap)
+        val liveMatched0 = (matName match {
+          case Some(m) => DeltaRead.readSnapshotRowIds(spark, rootP.toString, touchedSnap, m)
+          case None => DeltaRead.readSnapshot(spark, rootP.toString, touchedSnap)
+        }).where(condition)
+        val liveMatched =
+          if (updCdf)
+            liveMatched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else liveMatched0
+        try {
+        val assigned = liveMatched.select((snap.schema.fields.map { f =>
+          byLower.get(f.name.toLowerCase)
+            .map(e => expr(e).cast(f.dataType).as(f.name))
+            .getOrElse(col(s"`${f.name}`"))
+        } ++ matName.map(m => col(s"`$m`"))).toIndexedSeq: _*)
+        // generated columns RECOMPUTE from the post-update row unless the
+        // statement assigned them explicitly — only the ASSIGNED ones
+        // validate (a recomputed column equals its expression by
+        // construction; re-checking it would cost a pass per column)
+        val gens = generatedOf(snap)
+        val newRows = gens.foldLeft(assigned) { case (d, (name, e)) =>
+          if (byLower.contains(name.toLowerCase)) {
+            validateGenerated(snap, d, name, e, path, "UPDATE"); d
+          }
+          else d.withColumn(name,
+            expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
         }
-        else d.withColumn(name,
-          expr(e).cast(snap.schema(snap.schema.fieldIndex(name)).dataType))
-      }
-      enforceConstraints(snap, newRows, path, "UPDATE")
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          // with a materialized row-id column the pre/postimage SHARE
-          // each row's id (rename the id column to the cdc home
-          // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
-          // fresh ids are unknowable here, so no ids attach and the
-          // id-keyed CDF read refuses this commit loudly
-          val pre = matName.map(m => liveMatched
-            .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
-          val post = matName.map(m => newRows
-            .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
-          writeCdcFiles(spark, snap,
-            pre.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
-            rootP, fs)
-        }
-      val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
-      val newFiles = withStats(spark, fs, rootP,
-        writeDataFiles(spark, physDf, rootP, fs, physParts,
-          shredOk = shredOptIn(snap)))
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            updateContent(snap, updates, newFiles, condition, cdcFiles),
-            snap.configuration, Some(snap))) return next
-      (newFiles ++ cdcFiles).foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
-      } finally { if (updCdf) liveMatched.unpersist(false) }
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = true, cdfHandled = true)
-    }
-    throw new IllegalStateException(
-      s"UPDATE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
-  }
-
-  /** UPDATE's commit: DV'd removes+adds over the touched files (the
-    * DELETE half) plus dataChange=true adds for the updated images.
-    */
-  private def updateContent(snap: DeltaRead.Snapshot,
-                            updates: Seq[(String, Option[DeletionVectors.Descriptor],
-                              DeletionVectors.Descriptor)],
-                            newFiles: Seq[NewFile],
-                            condition: String,
-                            cdcFiles: Seq[NewFile]): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "UPDATE")
-    cib.putObject("operationParameters").put("predicate", condition)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    protocolUpgrade(snap).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    updates.foreach { case (rel, oldDv, newDv) =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      oldDv.foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-      if (newDv != null) {
-        val ad = mapper.createObjectNode
-        val adb = ad.putObject("add")
-        adb.put("path", encodePath(rel))
-        val pv = adb.putObject("partitionValues")
-        snap.files(rel).foreach { case (k, v) =>
-          val pk = snap.colMap.getOrElse(k, k)
-          if (v == null) pv.putNull(pk) else pv.put(pk, v)
-        }
-        adb.put("size", snap.sizes.getOrElse(rel, -1L))
-        adb.put("modificationTime", now)
-        adb.put("dataChange", true)
-        snap.stats.get(rel).foreach(adb.put("stats", _))
-        putDv(adb, newDv)
-        lines += mapper.writeValueAsString(ad)
+        enforceConstraints(snap, newRows, path, "UPDATE")
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            // with a materialized row-id column the pre/postimage SHARE
+            // each row's id (rename the id column to the cdc home
+            // [[DeltaRead.CdcRowIdCol]]); without it the postimage's
+            // fresh ids are unknowable here, so no ids attach and the
+            // id-keyed CDF read refuses this commit loudly
+            val pre = matName.map(m => liveMatched
+              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(liveMatched)
+            val post = matName.map(m => newRows
+              .withColumnRenamed(m, DeltaRead.CdcRowIdCol)).getOrElse(newRows)
+            writeCdcFiles(spark, snap,
+              pre.withColumn("_change_type", lit("update_preimage"))
+                .unionByName(post.withColumn("_change_type", lit("update_postimage"))),
+              rootP, fs)
+          }
+        val (physDf, physParts) = toPhysical(snap, newRows, matName.toSeq)
+        val newFiles = withStats(spark, fs, rootP,
+          writeDataFiles(spark, physDf, rootP, fs, physParts,
+            shredOk = shredOptIn(snap)))
+        Commit(CommitInfo("UPDATE", Seq("predicate" -> condition)) +:
+          (dvActions(snap, updates, cdcFiles) ++ newFiles.map(addOf(_))),
+          newFiles ++ cdcFiles, reclaimOnLoss = true)
+        } finally { if (updCdf) liveMatched.unpersist(false) }
       }
     }
-    newFiles.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
   }
 
   /** FILE-PRUNED MERGE (upsert): rows of `source` replace target rows
@@ -473,6 +403,15 @@ object DeltaWrite {
     * every reader. A CAS loss re-derives everything against the
     * winner's snapshot (the staged files are deleted — unlike
     * append/overwrite the data job DEPENDS on the snapshot it read).
+    *
+    * The source must be DETERMINISTIC: its key set is collected once
+    * per statement and decides the join semantics — which files are
+    * touched, which rows update and which insert, and (with a
+    * materialized row-id column) whether duplicate keys refuse. A
+    * source that yields different keys on re-evaluation (e.g. `rand()`
+    * or `limit` without an order) could disagree with that collected
+    * set; the statement persists the source, but a lost persist block
+    * is recomputed from the plan.
     */
   def merge(spark: SparkSession, source: DataFrame, path: String, keys: Seq[String],
             mergeFn: (DataFrame, DataFrame) => DataFrame = null,
@@ -502,7 +441,6 @@ object DeltaWrite {
                         maxCollectedKeys: Int): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
 
     // source key set: collected ONCE (prices the pruning for every
     // attempt); the per-file classification reruns per attempt.
@@ -578,11 +516,8 @@ object DeltaWrite {
         case _: IllegalArgumentException => _ => true
       }
 
-    var attempt = 0
-    while (attempt < 5) {
-      attempt += 1
-      val snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = true, cdfHandled = true)
+    commit(spark, path, "MERGE", DeltaRead.snapshot(spark, rootP.toString),
+        removesData = true, cdfHandled = true) { snap =>
       // CDF needs change ATTRIBUTION (which rows updated vs inserted) —
       // knowable only for the default upsert mergeFn; an arbitrary
       // mergeFn's replacement frame can't be decomposed into changes
@@ -708,7 +643,7 @@ object DeltaWrite {
       // source MUST carry the identity value — an explicit insert,
       // legal only under allowExplicitInsert (GENERATED BY DEFAULT).
       // The high-water mark bumps past the merged extreme in the SAME
-      // commit's metaData (mergeContent), preserving the protocol's
+      // commit's metaData ([[identityMetaData]]), preserving the protocol's
       // collision-freedom for later allocating appends. The extreme is
       // probed over the COMMITTED frame (a custom mergeFn may mint
       // values absent from the source), one bounded agg per identity
@@ -756,211 +691,88 @@ object DeltaWrite {
       val newFiles = withStats(spark, fs, rootP,
         writeDataFiles(spark, physDf, rootP, fs, physParts,
           shredOk = shredOptIn(snap)))
-      if (touched.isEmpty && newFiles.isEmpty) return snap.version // empty no-op
-
-      // CHANGE DATA FEED: decompose the default upsert into the
-      // protocol's change types — touched rows whose key the source
-      // carries are updates (preimage = current row, postimage = the
-      // source row realigned to the table schema), source rows with
-      // unseen keys are inserts. Carried rows (untouched by key) are
-      // NOT changes and never land in _change_data — exactly why a
-      // MERGE commit cannot leave CDF readers to derive from its
-      // whole-file add/remove actions.
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          val tblKeys = keys.map(k =>
-            snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
-          val srcNames = source.columns
-          val srcT = source.select(snap.schema.fields.map { f =>
-            if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
-          val tKeys = touchedData.select(tblKeys.map(col): _*)
-          // source keys from the driver-collected group set when
-          // complete (r19, guide §3.1) — the semi-join below then
-          // broadcasts instead of shuffling the touched-file side
-          val sKeys = srcKeysLocal.getOrElse(srcT.select(tblKeys.map(col): _*))
-          val changes = matName match {
-            case Some(m) =>
-              // id-keyed changes (rowTracking + materialized column):
-              // preimages carry each matched target row's own id,
-              // postimages inherit the key's surviving id (min — the
-              // same deterministic survivor the data rewrite keeps; a
-              // multi-row target key's extra preimages surface with
-              // their retired ids), inserts stay unkeyed — their fresh
-              // ids are assigned at publish, and the id-keyed CDF read
-              // re-derives them from this commit's new files.
-              // idByKey is the PERSISTED per-key survivor frame the data
-              // rewrite already computed (r19): its key set IS the
-              // distinct touched keys, so one inner join replaces the
-              // old tKeys semi-join + id left-join pair, and the insert
-              // anti-join probes the same tiny frame instead of
-              // re-scanning the touched files for their keys.
-              val idByKey = idByKeyOpt.get
-                .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-              touchedBase.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
-                .join(sKeys, tblKeys, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(srcT.join(idByKey, tblKeys, "inner")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
-                    tblKeys, "left_anti")
-                  .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
-                  .withColumn("_change_type", lit("insert")))
-            case None =>
-              touchedData.join(sKeys, tblKeys, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(srcT.join(tKeys, tblKeys, "left_semi")
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(srcT.join(tKeys, tblKeys, "left_anti")
-                  .withColumn("_change_type", lit("insert")))
+      if (touched.isEmpty && newFiles.isEmpty) NoOp(snap.version)
+      else {
+        // CHANGE DATA FEED: decompose the default upsert into the
+        // protocol's change types — touched rows whose key the source
+        // carries are updates (preimage = current row, postimage = the
+        // source row realigned to the table schema), source rows with
+        // unseen keys are inserts. Carried rows (untouched by key) are
+        // NOT changes and never land in _change_data — exactly why a
+        // MERGE commit cannot leave CDF readers to derive from its
+        // whole-file add/remove actions.
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            val tblKeys = keys.map(k =>
+              snap.schema.fieldNames.find(_.equalsIgnoreCase(k)).get)
+            val srcNames = source.columns
+            val srcT = source.select(snap.schema.fields.map { f =>
+              if (srcNames.exists(_.equalsIgnoreCase(f.name))) col(f.name)
+              else lit(null).cast(f.dataType).as(f.name)
+            }: _*)
+            val tKeys = touchedData.select(tblKeys.map(col): _*)
+            // source keys from the driver-collected group set when
+            // complete (r19, guide §3.1) — the semi-join below then
+            // broadcasts instead of shuffling the touched-file side
+            val sKeys = srcKeysLocal.getOrElse(srcT.select(tblKeys.map(col): _*))
+            val changes = matName match {
+              case Some(m) =>
+                // id-keyed changes (rowTracking + materialized column):
+                // preimages carry each matched target row's own id,
+                // postimages inherit the key's surviving id (min — the
+                // same deterministic survivor the data rewrite keeps; a
+                // multi-row target key's extra preimages surface with
+                // their retired ids), inserts stay unkeyed — their fresh
+                // ids are assigned at publish, and the id-keyed CDF read
+                // re-derives them from this commit's new files.
+                // idByKey is the PERSISTED per-key survivor frame the data
+                // rewrite already computed (r19): its key set IS the
+                // distinct touched keys, so one inner join replaces the
+                // old tKeys semi-join + id left-join pair, and the insert
+                // anti-join probes the same tiny frame instead of
+                // re-scanning the touched files for their keys.
+                val idByKey = idByKeyOpt.get
+                  .withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                touchedBase.withColumnRenamed(m, DeltaRead.CdcRowIdCol)
+                  .join(sKeys, tblKeys, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(srcT.join(idByKey, tblKeys, "inner")
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(srcT.join(idByKey.select(tblKeys.map(col): _*),
+                      tblKeys, "left_anti")
+                    .withColumn(DeltaRead.CdcRowIdCol, lit(null).cast("long"))
+                    .withColumn("_change_type", lit("insert")))
+              case None =>
+                touchedData.join(sKeys, tblKeys, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(srcT.join(tKeys, tblKeys, "left_semi")
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(srcT.join(tKeys, tblKeys, "left_anti")
+                    .withColumn("_change_type", lit("insert")))
+            }
+            // changes is empty ⟺ the source is empty (every source row is
+            // an update_postimage or an insert; every preimage needs a
+            // source key) — and the source's emptiness is already known
+            // from the collected key groups, so the old isEmpty probe
+            // re-ran the three cdc joins as its own job for nothing
+            // (r19, guide §1.2). `grouped` is complete OR past
+            // maxCollectedKeys — both cases non-empty when length > 0.
+            if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
           }
-          // changes is empty ⟺ the source is empty (every source row is
-          // an update_postimage or an insert; every preimage needs a
-          // source key) — and the source's emptiness is already known
-          // from the collected key groups, so the old isEmpty probe
-          // re-ran the three cdc joins as its own job for nothing
-          // (r19, guide §1.2). `grouped` is complete OR past
-          // maxCollectedKeys — both cases non-empty when length > 0.
-          if (grouped.isEmpty) Nil else writeCdcFiles(spark, snap, changes, rootP, fs)
-        }
 
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            mergeContent(snap, touched, newFiles, keys, cdcFiles,
-              mergeIdentityHw),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
+        // a lost race reclaims the staged files: the data job read THIS
+        // snapshot's touched files, so its output is stale against the
+        // winner's state and the next attempt re-derives from scratch
+        Commit(Seq(CommitInfo("MERGE", Seq("matchedKeys" -> keys.mkString(",")))) ++
+          identityMetaData(snap, mergeIdentityHw) ++ cdcFiles.map(cdcOf) ++
+          touched.map(rel => Remove(rel, dataChange = true, snap.dvs.get(rel))) ++
+          newFiles.map(addOf(_)),
+          newFiles ++ cdcFiles, reclaimOnLoss = true)
       }
-      // lost the race: the data job read THIS snapshot's touched files
-      // — the staged output is stale against the winner's state, so
-      // reclaim it and re-derive from scratch (commitMerge's posture)
-      (newFiles ++ cdcFiles).foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
       } finally { if (mergeCdf) idByKeyOpt.foreach(_.unpersist(false)) }
     }
-    throw new IllegalStateException(
-      s"Delta merge at $path lost the commit race 5 times — another writer is " +
-        "committing continuously; retry later")
   }
-
-  private def mergeContent(snap: DeltaRead.Snapshot, removes: Seq[String],
-                           adds: Seq[NewFile], keys: Seq[String],
-                           cdcFiles: Seq[NewFile] = Nil,
-                           identityHw: Map[String, Long] = Map.empty): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "MERGE")
-    cib.putObject("operationParameters").put("matchedKeys", keys.mkString(","))
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    identityMetaDataLine(snap, identityHw, now).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      snap.dvs.get(p).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
-  }
-
-  private def deleteContent(snap: DeltaRead.Snapshot,
-                            updates: Seq[(String, Option[DeletionVectors.Descriptor],
-                              DeletionVectors.Descriptor)],
-                            condition: String,
-                            cdcFiles: Seq[NewFile] = Nil): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "DELETE")
-    cib.putObject("operationParameters").put("predicate", condition)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    protocolUpgrade(snap).foreach(lines += _)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
-    updates.foreach { case (rel, oldDv, newDv) =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      oldDv.foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-      if (newDv != null) { // null = the DV covered the whole file: drop it
-        val ad = mapper.createObjectNode
-        val adb = ad.putObject("add")
-        adb.put("path", encodePath(rel))
-        val pv = adb.putObject("partitionValues")
-        // Snapshot pv keys are LOGICAL; the log's are PHYSICAL under
-        // column mapping — translate back on the way out
-        snap.files(rel).foreach { case (k, v) =>
-          val pk = snap.colMap.getOrElse(k, k)
-          if (v == null) pv.putNull(pk) else pv.put(pk, v)
-        }
-        adb.put("size", snap.sizes.getOrElse(rel, -1L))
-        adb.put("modificationTime", now)
-        adb.put("dataChange", true)
-        snap.stats.get(rel).foreach(adb.put("stats", _))
-        putDv(adb, newDv)
-        lines += mapper.writeValueAsString(ad)
-      }
-    }
-    lines.result().mkString("\n") + "\n"
-  }
-
-  /** The protocol line a first-DV commit needs: upgrade to reader v3 /
-    * writer v7 with `deletionVectors`, carrying every EXISTING feature
-    * forward — explicit ones verbatim, legacy versions expanded to the
-    * protocol's implied feature names (a protocol action REPLACES the
-    * old one; dropping a feature would break other writers).
-    */
-  private def protocolUpgrade(snap: DeltaRead.Snapshot): Option[String] =
-    protocolUpgradeTo(snap, "deletionVectors")
-
-  /** Generalized reader-feature upgrade: reader v3 / writer v7 carrying
-    * `feature` in BOTH lists (the reader-visible features this writer
-    * adds — deletionVectors, v2Checkpoint — are writer features too),
-    * plus `extraWriter` writer-only features landing in the same
-    * protocol action (a protocol action replaces the old one, so two
-    * upgrade lines in one commit would drop each other's additions).
-    */
-  /** The writer features a legacy `minWriterVersion` IMPLIES — the
-    * protocol's table: upgrading a legacy table to the v7 features
-    * form must list them all, or the upgrade silently drops
-    * enforcement other writers rely on. The single source for every
-    * upgrade site.
-    */
-  private def impliedWriterFeatures(minWriter: Int): Seq[String] = Seq(
-    2 -> Seq("appendOnly", "invariants"), 3 -> Seq("checkConstraints"),
-    4 -> Seq("changeDataFeed", "generatedColumns"), 5 -> Seq("columnMapping"),
-    6 -> Seq("identityColumns"))
-    .filter(_._1 <= minWriter).flatMap(_._2)
 
   /** Reader+writer table features the TYPES in a schema demand —
     * the protocol gates these encodings behind features so a reader
@@ -972,7 +784,8 @@ object DeltaWrite {
     * `timestamp without time zone` → `timestampNtz`. Recursive: a
     * variant nested inside a struct/array/map gates the table too.
     * Neither feature is implied by any legacy protocol version, so a
-    * schema carrying one must commit in the v3/v7 features form.
+    * schema carrying one must commit in the v3/v7 features form
+    * ([[DeltaTxn.protocolAction]]).
     */
   private[sources] def typeFeatures(
       dt: org.apache.spark.sql.types.DataType): Set[String] = {
@@ -987,60 +800,6 @@ object DeltaWrite {
       case m: MapType => typeFeatures(m.keyType) ++ typeFeatures(m.valueType)
       case _ => Set.empty
     }
-  }
-
-  /** The protocol line a schema-changing commit must carry when its
-    * NEW schema of record introduces type-gated features the table's
-    * protocol does not yet list ([[typeFeatures]]) — the multi-feature
-    * sibling of [[protocolUpgradeTo]] (two protocol lines in one
-    * commit would drop each other's additions, so the missing
-    * features land in ONE line). None = nothing missing.
-    */
-  private def protocolUpgradeForTypes(snap: DeltaRead.Snapshot,
-                                      features: Set[String]): Option[String] = {
-    val have: Set[String] =
-      if (snap.minReader >= 3) snap.readerFeatures.intersect(snap.writerFeatures)
-      else Set.empty
-    val need = features -- have
-    if (need.isEmpty) return None
-    val legacyWriter = impliedWriterFeatures(snap.minWriter)
-    val legacyReader = if (snap.minReader >= 2) Seq("columnMapping") else Nil
-    val rf = (snap.readerFeatures ++ legacyReader ++ need).toSeq.sorted
-    val wf = (snap.writerFeatures ++ legacyWriter ++ legacyReader ++ need).toSeq.sorted
-    val p = mapper.createObjectNode
-    val pb = p.putObject("protocol")
-    pb.put("minReaderVersion", math.max(snap.minReader, 3))
-    pb.put("minWriterVersion", math.max(snap.minWriter, 7))
-    val rfa = pb.putArray("readerFeatures"); rf.foreach(rfa.add)
-    val wfa = pb.putArray("writerFeatures"); wf.foreach(wfa.add)
-    Some(mapper.writeValueAsString(p))
-  }
-
-  private def protocolUpgradeTo(snap: DeltaRead.Snapshot, feature: String,
-                                extraWriter: Seq[String] = Nil): Option[String] =
-    protocolUpgradeToAll(snap, Seq(feature), extraWriter)
-
-  /** [[protocolUpgradeTo]] for SEVERAL reader+writer features at once —
-    * a commit carries at most ONE protocol action (two lines would
-    * clobber each other), so an operation needing multiple reader
-    * features folds them into one upgrade line here.
-    */
-  private def protocolUpgradeToAll(snap: DeltaRead.Snapshot, features: Seq[String],
-                                   extraWriter: Seq[String] = Nil): Option[String] = {
-    if (features.forall(f => snap.minReader >= 3 && snap.readerFeatures.contains(f)) &&
-        extraWriter.forall(snap.writerFeatures.contains)) return None
-    val legacyWriter = impliedWriterFeatures(snap.minWriter)
-    val legacyReader = if (snap.minReader >= 2) Seq("columnMapping") else Nil
-    val rf = (snap.readerFeatures ++ legacyReader ++ features).toSeq.sorted
-    val wf = (snap.writerFeatures ++ legacyWriter ++ legacyReader ++ extraWriter
-      ++ features).toSeq.sorted
-    val p = mapper.createObjectNode
-    val pb = p.putObject("protocol")
-    pb.put("minReaderVersion", math.max(snap.minReader, 3))
-    pb.put("minWriterVersion", math.max(snap.minWriter, 7))
-    val rfa = pb.putArray("readerFeatures"); rf.foreach(rfa.add)
-    val wfa = pb.putArray("writerFeatures"); wf.foreach(wfa.add)
-    Some(mapper.writeValueAsString(p))
   }
 
   /** Writer-side protocol gate (PROTOCOL.md "Writer Requirements"):
@@ -1136,7 +895,7 @@ object DeltaWrite {
         // them and WRITES the v2 form when delta.checkpointPolicy = v2 pins it
       case "inCommitTimestamp" => () // ENFORCED at publish: every commit into a
         // table pinning delta.enableInCommitTimestamps=true gets its commitInfo
-        // stamped with a monotonic inCommitTimestamp ([[publishCommit]])
+        // stamped with a monotonic inCommitTimestamp ([[DeltaTxn.commit]])
       case "timestampNtz" => () // a TYPE, not a behavior: Spark's parquet
         // writer/reader carry TIMESTAMP_NTZ natively
       case "variantType" | "variantType-preview" => () // a TYPE, not a
@@ -1144,7 +903,7 @@ object DeltaWrite {
         // natively, and graft's data writes force the UNSHREDDED
         // struct<metadata, value> layout the feature licenses
         // ([[writeDataFiles]]); new tables with variant columns are
-        // created straight in the features form ([[commitContent]])
+        // created straight in the features form ([[writeActions]])
       case "variantShredding-preview" => () // ALLOWS shredded layouts,
         // does not mandate them — graft writes shredded only when the
         // table also pins delta.enableVariantShredding=true
@@ -1203,7 +962,7 @@ object DeltaWrite {
         // feature already licenses
       case "rowTracking" => () // IMPLEMENTED (round 17): every commit's
         // add actions get baseRowId/defaultRowCommitVersion stamped at
-        // the publish choke point ([[stampRowTracking]]) — fresh ranges
+        // the publish choke point ([[DeltaTxn.commit]]) — fresh ranges
         // from the delta.rowTracking high-water-mark domain for new
         // files, carried ids for re-adds of live paths (DV DML) and
         // restores; checkpoints CARRY both fields. OPTIMIZE, MERGE and
@@ -1228,68 +987,25 @@ object DeltaWrite {
     }
   }
 
-  /** One CAS-retried metaData-only commit: `change` re-derives the new
-    * (schema, partitionColumns, configuration, extra protocol line)
-    * against each attempt's fresh snapshot. The shared engine under
-    * ALTER-TABLE-shaped statements (rename/drop column, enable column
-    * mapping) — zero data I/O, the files bind by physical name.
+  /** One metaData-only commit: `change` re-derives the new (schema,
+    * partitionColumns, configuration, protocol action) against each
+    * attempt's snapshot, or signals an explicit NO-OP with `None`
+    * (commit nothing, return the current version). The shared engine
+    * under ALTER-TABLE-shaped statements (rename/drop/widen column,
+    * enable column mapping, add constraint) — zero data I/O, the files
+    * bind by physical name.
     */
   private def commitMetaDataChange(spark: SparkSession, path: String, operation: String)
-      (change: DeltaRead.Snapshot => (org.apache.spark.sql.types.StructType,
-        Seq[String], Map[String, String], Option[String])): Long =
-    commitMetaDataChangeOpt(spark, path, operation)(s => Some(change(s)))
-
-  /** [[commitMetaDataChange]] whose `change` may signal an explicit
-    * NO-OP with `None` (commit nothing, return the current version) —
-    * the signal is a plain return value, not a non-local return
-    * escaping through the retry loop (which would break silently if
-    * the loop ever caught Throwable or deferred the closure).
-    */
-  private def commitMetaDataChangeOpt(spark: SparkSession, path: String, operation: String)
       (change: DeltaRead.Snapshot => Option[(org.apache.spark.sql.types.StructType,
-        Seq[String], Map[String, String], Option[String])]): Long = {
-    val rootP = qualifiedRoot(spark, path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = false)
-      val (schema, parts, conf, protocolLine) = change(snap) match {
-        case Some(t) => t
-        case None => return snap.version // explicit no-op: nothing to commit
+        Seq[String], Map[String, String], Option[Protocol])]): Long =
+    commit(spark, path, operation, latestSnapshot(spark, path), removesData = false) { snap =>
+      change(snap) match {
+        case None => NoOp(snap.version)
+        case Some((schema, parts, conf, protocol)) =>
+          Commit(Seq(CommitInfo(operation)) ++ protocol ++
+            Seq(metaDataOf(Some(snap), schema.json, parts, conf)))
       }
-      val now = System.currentTimeMillis
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", now)
-      cib.put("operation", operation)
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      protocolLine.foreach(lines += _)
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      parts.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      conf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            lines.result().mkString("\n") + "\n", conf, Some(snap))) return next
     }
-    throw new IllegalStateException(
-      s"$operation at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
-  }
 
   /** Does SQL expression `e` reference identifier `name`? Word-boundary
     * textual probe — conservative (a string literal containing the
@@ -1313,41 +1029,19 @@ object DeltaWrite {
   def enableColumnMapping(spark: SparkSession, path: String): Long = {
     import org.apache.spark.sql.types.MetadataBuilder
     commitMetaDataChange(spark, path, "SET TBLPROPERTIES") { snap =>
-      if (snap.colMap.nonEmpty) // already mapped: no-op at this version
-        return snap.version
-      val fields = snap.schema.fields.zipWithIndex.map { case (f, i) =>
-        f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
-          .putLong("delta.columnMapping.id", i + 1L)
-          .putString("delta.columnMapping.physicalName", f.name).build())
+      if (snap.colMap.nonEmpty) None // already mapped: no-op at this version
+      else {
+        val fields = snap.schema.fields.zipWithIndex.map { case (f, i) =>
+          f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+            .putLong("delta.columnMapping.id", i + 1L)
+            .putString("delta.columnMapping.physicalName", f.name).build())
+        }
+        val conf = snap.configuration +
+          ("delta.columnMapping.mode" -> "name") +
+          ("delta.columnMapping.maxColumnId" -> fields.length.toString)
+        Some((org.apache.spark.sql.types.StructType(fields), snap.partitionColumns,
+          conf, protocolAction(snap, Set("columnMapping"))))
       }
-      val conf = snap.configuration +
-        ("delta.columnMapping.mode" -> "name") +
-        ("delta.columnMapping.maxColumnId" -> fields.length.toString)
-      val protocolLine: Option[String] =
-        if (snap.minWriter >= 7) {
-          if (snap.writerFeatures.contains("columnMapping")) None
-          else {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", math.max(snap.minReader, 2))
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              (snap.readerFeatures + "columnMapping").toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures + "columnMapping").toSeq.sorted.foreach(wfa.add)
-            Some(mapper.writeValueAsString(p))
-          }
-        } else if (snap.minWriter < 5 || snap.minReader < 2) {
-          val p = mapper.createObjectNode
-          val pb = p.putObject("protocol")
-          pb.put("minReaderVersion", math.max(snap.minReader, 2))
-          pb.put("minWriterVersion", math.max(snap.minWriter, 5))
-          Some(mapper.writeValueAsString(p))
-        } else None
-      (org.apache.spark.sql.types.StructType(fields), snap.partitionColumns,
-        conf, protocolLine)
     }
   }
 
@@ -1388,7 +1082,7 @@ object DeltaWrite {
       ShortType -> Set[DataType](IntegerType, LongType),
       IntegerType -> Set[DataType](LongType),
       FloatType -> Set[DataType](DoubleType))
-    commitMetaDataChangeOpt(spark, path, "CHANGE COLUMN") { snap =>
+    commitMetaDataChange(spark, path, "CHANGE COLUMN") { snap =>
       val idx = snap.schema.fieldNames.indexWhere(_.equalsIgnoreCase(column))
       require(idx >= 0, s"widenColumn at $path: unknown column '$column' " +
         s"(table columns: ${snap.schema.fieldNames.mkString(", ")})")
@@ -1419,7 +1113,7 @@ object DeltaWrite {
           .putMetadataArray("delta.typeChanges", prev :+ change).build())
       (StructType(snap.schema.fields.updated(idx, widened)),
         snap.partitionColumns, snap.configuration,
-        protocolUpgradeTo(snap, "typeWidening"))
+        protocolAction(snap, Set("typeWidening")))
       }
     }
   }
@@ -1460,7 +1154,7 @@ object DeltaWrite {
       fields(idx) = fields(idx).copy(name = newName)
       val parts = snap.partitionColumns.map(p =>
         if (p.equalsIgnoreCase(oldName)) newName else p)
-      (org.apache.spark.sql.types.StructType(fields), parts, snap.configuration, None)
+      Some((org.apache.spark.sql.types.StructType(fields), parts, snap.configuration, None))
     }
   }
 
@@ -1493,8 +1187,8 @@ object DeltaWrite {
           s"DROP COLUMN at $path: generated column '$g' (GENERATED AS ($e)) " +
             s"references '$name' — drop '$g' first")
       }
-      (org.apache.spark.sql.types.StructType(snap.schema.fields.patch(idx, Nil, 1)),
-        snap.partitionColumns, snap.configuration, None)
+      Some((org.apache.spark.sql.types.StructType(snap.schema.fields.patch(idx, Nil, 1)),
+        snap.partitionColumns, snap.configuration, None))
     }
 
   /** Identity-column specs (`delta.identity.*` field metadata). */
@@ -1523,33 +1217,21 @@ object DeltaWrite {
     * contract: an explicit insert pushing past the mark must bump it
     * in the SAME commit, or later allocating appends collide.
     */
-  private def identityMetaDataLine(snap: DeltaRead.Snapshot,
-                                   identityHw: Map[String, Long],
-                                   now: Long): Option[String] = {
-    if (identityHw.isEmpty) return None
-    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
-    val schema = StructType(snap.schema.fields.map { f =>
-      identityHw.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, hw)) => f.copy(metadata = new MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putLong("delta.identity.highWaterMark", hw).build())
-        case None => f
-      }
-    })
-    val md = mapper.createObjectNode
-    val mdb = md.putObject("metaData")
-    mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-    val fmt = mdb.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    mdb.put("schemaString", schema.json)
-    val pc = mdb.putArray("partitionColumns")
-    snap.partitionColumns.foreach(pc.add)
-    val cfg = mdb.putObject("configuration")
-    snap.configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-    mdb.put("createdTime", now)
-    Some(mapper.writeValueAsString(md))
-  }
+  private def identityMetaData(snap: DeltaRead.Snapshot,
+                               identityHw: Map[String, Long]): Option[MetaData] =
+    if (identityHw.isEmpty) None
+    else {
+      import org.apache.spark.sql.types.{MetadataBuilder, StructType}
+      val schema = StructType(snap.schema.fields.map { f =>
+        identityHw.find(_._1.equalsIgnoreCase(f.name)) match {
+          case Some((_, hw)) => f.copy(metadata = new MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putLong("delta.identity.highWaterMark", hw).build())
+          case None => f
+        }
+      })
+      Some(metaDataOf(Some(snap), schema.json, snap.partitionColumns, snap.configuration))
+    }
 
   /** Generated columns (`delta.generationExpression` field metadata). */
   private def generatedOf(snap: DeltaRead.Snapshot): Seq[(String, String)] =
@@ -1647,7 +1329,7 @@ object DeltaWrite {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' must be an identifier")
     val key = s"delta.constraints.${name.toLowerCase}"
-    // validation and commit share ONE CAS loop (commitMetaDataChange
+    // validation and commit share ONE commit loop (commitMetaDataChange
     // re-derives per attempt): a concurrent append between the scan
     // and the commit loses us the CAS, and the retry RE-VALIDATES
     // against the winner's snapshot — no violating row can slip in
@@ -1660,31 +1342,8 @@ object DeltaWrite {
       if (bad.nonEmpty) throw new IllegalArgumentException(
         s"cannot add CHECK constraint '$name' at $path: existing row violates " +
           s"CHECK ($expr); offending row: ${bad.head}")
-      val protocolLine: Option[String] =
-        if (snap.minWriter >= 7) {
-          if (snap.writerFeatures.contains("checkConstraints")) None
-          else {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures + "checkConstraints").toSeq.sorted.foreach(wfa.add)
-            Some(mapper.writeValueAsString(p))
-          }
-        } else if (snap.minWriter < 3) {
-          val p = mapper.createObjectNode
-          val pb = p.putObject("protocol")
-          pb.put("minReaderVersion", snap.minReader)
-          pb.put("minWriterVersion", 3)
-          Some(mapper.writeValueAsString(p))
-        } else None
-      (snap.schema, snap.partitionColumns,
-        snap.configuration + (key -> expr), protocolLine)
+      Some((snap.schema, snap.partitionColumns,
+        snap.configuration + (key -> expr), protocolAction(snap, Set("checkConstraints"))))
     }
   }
 
@@ -1928,325 +1587,8 @@ object DeltaWrite {
     val Append, Overwrite, DynamicOverwrite = Value
   }
 
-  // ----- In-Commit Timestamps (writer feature `inCommitTimestamp`) ---
-  // When `delta.enableInCommitTimestamps = true`, the protocol requires
-  // every commit's commitInfo to be the FIRST action and to carry an
-  // `inCommitTimestamp` strictly greater than the previous commit's —
-  // the clock-skew-proof timestamp delta-spark 4.x time travel reads.
-
-  private[sources] def ictEnabled(conf: Map[String, String]): Boolean =
-    conf.get("delta.enableInCommitTimestamps").exists(_.equalsIgnoreCase("true"))
-
-  /** The previous commit's inCommitTimestamp (None when v < 0, the
-    * JSON was log-cleaned, or it predates enablement) — one small read
-    * of the head commit, which metadata cleanup always preserves.
-    */
-  private[sources] def prevIct(fs: FileSystem, logP: Path, v: Long): Option[Long] =
-    if (v < 0) None
-    else graft.pipeline.VersionedTable.readSmall(fs, new Path(logP, f"$v%020d.json"))
-      .flatMap(_.split("\n").find(_.contains("inCommitTimestamp")))
-      .flatMap { l =>
-        val n = mapper.readTree(l)
-        Option(n.get("commitInfo"))
-          .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
-      }
-
-  /** Monotonic ICT for the commit about to land at `version`. */
-  private def nextIct(fs: FileSystem, logP: Path, version: Long): Long =
-    math.max(System.currentTimeMillis,
-      prevIct(fs, logP, version - 1).map(_ + 1L).getOrElse(Long.MinValue))
-
-  /** Best-effort `<v>.crc` version-checksum sidecar in delta-spark's
-    * VersionChecksum shape: table-level aggregates (tableSizeBytes,
-    * numFiles) plus the replayed metadata/protocol, which a reader can
-    * validate a snapshot against without replaying the log. Computed
-    * INCREMENTALLY from the pre-commit snapshot plus this commit's own
-    * actions — never a replay, so the 100 TB cost is O(commit).
-    * Skipped — never written wrong — when the base state is
-    * unavailable (no prevSnap on a non-initial commit) or any live
-    * file's size is unknown (a legacy add without `size`). Optional
-    * per the protocol; delta-spark validates opportunistically, as
-    * does [[DeltaRead.snapshot]].
-    */
-  private def writeVersionChecksum(fs: FileSystem, logP: Path, version: Long,
-                                   content: String,
-                                   prevSnap: Option[DeltaRead.Snapshot]): Unit =
-    try {
-      // runtime kill switch (SPARK_GRAFT_DELTA_CRC=off) so a bench A/B
-      // can compare crc-on vs crc-off on the SAME binary; checksums are
-      // optional per the protocol, so "off" only loses validation depth
-      if (DeltaRead.crcDisabled) return
-      var metaNode: com.fasterxml.jackson.databind.JsonNode = null
-      var protoNode: com.fasterxml.jackson.databind.JsonNode = null
-      var ict: Option[Long] = None
-      val adds = Map.newBuilder[String, Long]
-      val removesB = Set.newBuilder[String]
-      val txnB = Map.newBuilder[String, Long]
-      val domB = Map.newBuilder[String, (String, Boolean)]
-      content.split("\n").filter(_.trim.nonEmpty).foreach { l =>
-        val n = mapper.readTree(l)
-        if (n.has("metaData")) metaNode = n.get("metaData")
-        if (n.has("protocol")) protoNode = n.get("protocol")
-        if (n.has("commitInfo") && n.get("commitInfo").has("inCommitTimestamp"))
-          ict = Some(n.get("commitInfo").get("inCommitTimestamp").asLong)
-        if (n.has("add")) {
-          val a = n.get("add")
-          adds += DeltaRead.decodePath(a.get("path").asText) ->
-            (if (a.has("size")) a.get("size").asLong(-1L) else -1L)
-        }
-        if (n.has("remove"))
-          removesB += DeltaRead.decodePath(n.get("remove").get("path").asText)
-        if (n.has("txn")) {
-          val t = n.get("txn")
-          txnB += t.path("appId").asText() -> t.path("version").asLong()
-        }
-        if (n.has("domainMetadata")) {
-          val d = n.get("domainMetadata")
-          domB += d.path("domain").asText() ->
-            ((d.path("configuration").asText(""), d.path("removed").asBoolean(false)))
-        }
-      }
-      val base: Map[String, Long] = prevSnap match {
-        case Some(s) => s.files.keys.map(p => p -> s.sizes.getOrElse(p, -1L)).toMap
-        case None if version == 0L => Map.empty
-        case None => return
-      }
-      val post = base -- removesB.result() ++ adds.result()
-      if (post.values.exists(_ < 0L)) return
-      if (metaNode == null) metaNode = prevSnap.map(crcMetaNode).orNull
-      if (protoNode == null) protoNode = prevSnap.map(crcProtoNode).orNull
-      if (metaNode == null || protoNode == null) return
-      val node = mapper.createObjectNode
-      node.put("tableSizeBytes", post.values.sum)
-      node.put("numFiles", post.size.toLong)
-      node.put("numMetadata", 1L)
-      node.put("numProtocol", 1L)
-      ict.foreach(v => node.put("inCommitTimestampOpt", v))
-      node.set[com.fasterxml.jackson.databind.JsonNode]("metadata", metaNode)
-      node.set[com.fasterxml.jackson.databind.JsonNode]("protocol", protoNode)
-      // the optional state lists delta-spark's VersionChecksum also
-      // carries. setTransactions is CAPPED (ADVICE r16): delta-spark
-      // omits the list past ~100 appIds rather than letting a
-      // many-sink streaming table grow every crc (and every commit's
-      // driver work) unboundedly — the list is optional per the
-      // protocol, so omission only loses validation depth.
-      val postTxns = prevSnap.map(_.txns).getOrElse(Map.empty) ++ txnB.result()
-      if (postTxns.nonEmpty && postTxns.size <= 100) {
-        val arr = node.putArray("setTransactions")
-        postTxns.toSeq.sortBy(_._1).foreach { case (appId, v) =>
-          val t = arr.addObject(); t.put("appId", appId); t.put("version", v)
-        }
-      }
-      val postDoms = prevSnap.map(_.domains.map { case (d, c) => d -> ((c, false)) })
-        .getOrElse(Map.empty) ++ domB.result()
-      val liveDoms = postDoms.collect { case (d, (c, false)) => d -> c }
-      if (liveDoms.nonEmpty) {
-        val arr = node.putArray("domainMetadata")
-        liveDoms.toSeq.sortBy(_._1).foreach { case (d, c) =>
-          val o = arr.addObject()
-          o.put("domain", d); o.put("configuration", Option(c).getOrElse(""))
-          o.put("removed", false)
-        }
-      }
-      graft.pipeline.VersionedTable.casPublish(
-        fs, new Path(logP, f"$version%020d.crc"),
-        mapper.writeValueAsString(node) + "\n")
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  private def crcMetaNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode = {
-    val md = mapper.createObjectNode
-    md.put("id", Option(s.metaId).getOrElse(""))
-    val fmt = md.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    md.put("schemaString", s.schema.json)
-    val pc = md.putArray("partitionColumns")
-    s.partitionColumns.foreach(pc.add)
-    val cfg = md.putObject("configuration")
-    s.configuration.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-    md
-  }
-
-  private def crcProtoNode(s: DeltaRead.Snapshot): com.fasterxml.jackson.databind.JsonNode = {
-    val pr = mapper.createObjectNode
-    pr.put("minReaderVersion", s.minReader)
-    pr.put("minWriterVersion", s.minWriter)
-    if (s.readerFeatures.nonEmpty) {
-      val a = pr.putArray("readerFeatures")
-      s.readerFeatures.toSeq.sorted.foreach(a.add)
-    }
-    if (s.writerFeatures.nonEmpty) {
-      val a = pr.putArray("writerFeatures")
-      s.writerFeatures.toSeq.sorted.foreach(a.add)
-    }
-    pr
-  }
-
   /** The protocol's row-tracking high-water-mark domain. */
   private[sources] val RowTrackingDomain = "delta.rowTracking"
-
-  private def parseHwm(cfg: String): Long =
-    try {
-      val n = mapper.readTree(cfg)
-      if (n.hasNonNull("rowIdHighWaterMark")) n.get("rowIdHighWaterMark").asLong(-1L)
-      else -1L
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-
-  /** ROW TRACKING (writer feature `rowTracking`): stamp every add
-    * action in `content` with `baseRowId` / `defaultRowCommitVersion`
-    * and advance the [[RowTrackingDomain]] high-water mark — the
-    * protocol's writer contract whenever the feature is in
-    * writerFeatures (enabled or merely supported). Runs at the publish
-    * choke point so every DML path (append, overwrite, merge, DV
-    * delete/update, optimize, restore) satisfies the contract without
-    * per-path code:
-    *  - an add already CARRYING baseRowId keeps it (restore embeds the
-    *    target snapshot's ids; foreign content is trusted) — the hwm
-    *    still rises to cover it when its stats expose numRecords;
-    *  - a re-add of a LIVE path (DV DML re-adds the same file) carries
-    *    the file's existing ids from `prevSnap` — physical rows are
-    *    unchanged, so their ids must not move;
-    *  - a NEW file gets the next fresh range: baseRowId = hwm + 1,
-    *    hwm += numRecords (from `add.stats` — refusing loudly when a
-    *    new add has no numRecords, because an unknowable range would
-    *    corrupt the watermark for every other writer), and
-    *    defaultRowCommitVersion = the committing version.
-    * The domain action lands in the same commit (last-wins replay);
-    * per-attempt re-stamping is safe because the caller re-snapshots
-    * after a lost CAS. O(commit actions) — no table scan.
-    */
-  private[sources] def stampRowTracking(version: Long, content: String,
-      prevSnap: Option[DeltaRead.Snapshot]): String = {
-    import scala.jdk.CollectionConverters._
-    // cheap reject: the feature name must appear in the prev protocol
-    // or in this commit's own protocol line
-    val prevActive = prevSnap.exists(s =>
-      s.minWriter >= 7 && s.writerFeatures.contains("rowTracking"))
-    if (!prevActive && !content.contains("rowTracking")) return content
-    val lines = content.split("\n").toIndexedSeq.filter(_.trim.nonEmpty)
-    val contentActive = lines.exists { l =>
-      l.contains("\"protocol\"") && l.contains("rowTracking") && {
-        val n = mapper.readTree(l)
-        n.has("protocol") && Option(n.get("protocol").get("writerFeatures"))
-          .exists(_.elements().asScala.exists(_.asText() == "rowTracking"))
-      }
-    }
-    if (!prevActive && !contentActive) return content
-    var hwm = prevSnap.flatMap(_.domains.get(RowTrackingDomain))
-      .map(parseHwm).getOrElse(-1L)
-    // Missing/unparseable high-water-mark domain on a table that already
-    // carries stamped files: restarting at 0 would silently mint row ids
-    // DUPLICATING the live files' ranges (the disjoint-range invariant
-    // with no error). Re-seed from the live ranges themselves —
-    // max(baseRowId + numRecords - 1) — refusing loudly when a stamped
-    // file's numRecords is unknowable (its range can't be bounded).
-    if (hwm < 0L && prevSnap.exists(_.rowIds.nonEmpty)) {
-      val s = prevSnap.get
-      hwm = s.rowIds.iterator.map { case (rel, (base, _)) =>
-        val nr = s.stats.get(rel).flatMap(DeltaRead.parseAddStats)
-          .map(_.rows).filter(_ >= 0L).getOrElse(
-            throw new IllegalStateException(
-              s"row tracking: the ${RowTrackingDomain} high-water-mark domain is " +
-                s"missing or unparseable and live file '$rel' carries a baseRowId " +
-                "but no numRecords stats — its id range cannot be bounded, so a " +
-                "fresh range cannot be assigned without risking duplicate row ids"))
-        base + nr - 1L
-      }.max
-    }
-    val carried: Map[String, (Long, Long)] =
-      prevSnap.map(_.rowIds).getOrElse(Map.empty)
-    def numRecordsOf(a: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
-      Option(a.get("stats")).filterNot(_.isNull).map(_.asText())
-        .flatMap(DeltaRead.parseAddStats).map(_.rows).filter(_ >= 0L)
-    var stamped = false
-    var domainSeen = false
-    val out = lines.map { l =>
-      val n = mapper.readTree(l)
-      if (n.has("domainMetadata") &&
-          n.get("domainMetadata").path("domain").asText() == RowTrackingDomain) {
-        // content carrying its own hwm (foreign shape): fold it in and
-        // drop the line — the recomputed domain appended below covers it
-        domainSeen = true
-        hwm = math.max(hwm,
-          parseHwm(n.get("domainMetadata").path("configuration").asText("")))
-        null
-      } else if (n.has("add")) {
-        val a = n.get("add").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-        if (a.hasNonNull("baseRowId")) {
-          numRecordsOf(a).foreach(nr =>
-            hwm = math.max(hwm, a.get("baseRowId").asLong() + nr - 1))
-          l
-        } else {
-          val rel = DeltaRead.decodePath(a.get("path").asText())
-          carried.get(rel) match {
-            case Some((brid, dcv)) =>
-              a.put("baseRowId", brid)
-              if (dcv >= 0L) a.put("defaultRowCommitVersion", dcv)
-              stamped = true
-              mapper.writeValueAsString(n)
-            case None =>
-              val nr = numRecordsOf(a).getOrElse(throw new UnsupportedOperationException(
-                s"row tracking requires numRecords stats on every new add action — " +
-                  s"'$rel' carries none; cannot assign a sound baseRowId range"))
-              a.put("baseRowId", hwm + 1)
-              a.put("defaultRowCommitVersion", version)
-              hwm += nr
-              stamped = true
-              mapper.writeValueAsString(n)
-          }
-        }
-      } else l
-    }.filter(_ != null)
-    if (!stamped && !domainSeen) return content
-    val dm = mapper.createObjectNode
-    val dmb = dm.putObject("domainMetadata")
-    dmb.put("domain", RowTrackingDomain)
-    dmb.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
-    dmb.put("removed", false)
-    (out :+ mapper.writeValueAsString(dm)).mkString("\n") + "\n"
-  }
-
-  /** Publish one Delta commit: plain CAS for ordinary tables; under
-    * ICT the content is re-stamped PER ATTEMPT (the timestamp must
-    * exceed whatever commit actually precedes this one) — the existing
-    * commitInfo line moves to the front and gains `inCommitTimestamp`,
-    * or a minimal one is prepended for content that carried none.
-    * Row-tracking tables get their add actions stamped here too
-    * ([[stampRowTracking]]). A winning publish also emits the `<v>.crc`
-    * version-checksum sidecar (best-effort) when `prevSnap` provides
-    * the base state.
-    */
-  private def publishCommit(fs: FileSystem, logP: Path, version: Long,
-                            content: String, conf: Map[String, String],
-                            prevSnap: Option[DeltaRead.Snapshot] = None): Boolean = {
-    val stamped =
-      if (!ictEnabled(conf)) content
-      else {
-        val ict = nextIct(fs, logP, version)
-        val lines = content.split("\n").toIndexedSeq.filter(_.trim.nonEmpty)
-        val (ci, rest) = lines.partition(l =>
-          l.contains("\"commitInfo\"") && mapper.readTree(l).has("commitInfo"))
-        val node = ci.headOption.map(mapper.readTree(_)
-            .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-          .getOrElse {
-            val n = mapper.createObjectNode
-            val b = n.putObject("commitInfo")
-            b.put("timestamp", ict)
-            b.put("engineInfo", "graft-delta-writer/1.0")
-            n
-          }
-        node.get("commitInfo")
-          .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-          .put("inCommitTimestamp", ict)
-        (mapper.writeValueAsString(node) +: rest).mkString("\n") + "\n"
-      }
-    val rowStamped = stampRowTracking(version, stamped, prevSnap)
-    val won = graft.pipeline.VersionedTable.casPublish(
-      fs, new Path(logP, f"$version%020d.json"), rowStamped)
-    if (won) writeVersionChecksum(fs, logP, version, rowStamped, prevSnap)
-    won
-  }
 
   /** Auto-checkpoint cadence: after a commit lands version V where
     * `V % interval == 0`, the writer folds the log into a
@@ -2269,7 +1611,7 @@ object DeltaWrite {
     * carries (the snapshot's, or the new metaData's when the commit
     * replaced it), so an interval change applies from its own commit on.
     */
-  private def autoCheckpoint(spark: SparkSession, root: String, version: Long,
+  private[sources] def autoCheckpoint(spark: SparkSession, root: String, version: Long,
                              config: Map[String, String]): Unit =
     if (version > 0 && version % effectiveCheckpointInterval(config) == 0)
       try checkpoint(spark, root)
@@ -2285,7 +1627,6 @@ object DeltaWrite {
                     mergeSchema: Boolean = false): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
 
     val existing: Option[DeltaRead.Snapshot] =
       if (DeltaRead.isDeltaTable(spark, rootP.toString))
@@ -2304,10 +1645,8 @@ object DeltaWrite {
     // delta.columnMapping.maxColumnId, delta-spark's own minting
     // contract (see the mergeSchema evolution path below, which this
     // reuses).
-    // cdfHandled: an overwrite's changes are EXACTLY whole-file
-    // removes (DV descriptors carried) + whole-file adds — the shape
-    // CDF readers derive delete/insert changes from without cdc files
-    // (delta-spark's own INSERT OVERWRITE posture)
+    // The writer gate runs here, before the data job, and again on
+    // every commit attempt's snapshot.
     existing.foreach(requireWritable(_, path, removesData = mode != Mode.Append,
       cdfHandled = true))
     // non-append writes on DV'd tables are safe: the removes this
@@ -2374,7 +1713,7 @@ object DeltaWrite {
     // zipWithIndex pass — batch-sized, never a table scan); a batch
     // SUPPLYING one requires allowExplicitInsert and pushes the
     // high-water past the supplied extreme. The new high-water commits
-    // in the SAME metaData action (commitContent), and a RACING
+    // in the SAME metaData action ([[writeActions]]), and a RACING
     // identity allocation is a true conflict: the CAS loser sees the
     // moved mark and aborts loudly (delta-spark aborts such txns too).
     val identities: Seq[IdSpec] =
@@ -2463,7 +1802,7 @@ object DeltaWrite {
     // already carries — a foreign log may have skipped the config
     // key), physical names are fresh `col-<uuid>` tokens that no
     // reader ever resolves by logical name. The commit bumps
-    // maxColumnId in the SAME metaData action (commitContent), and
+    // maxColumnId in the SAME metaData action ([[writeActions]]), and
     // the data files below land with the minted physical names.
     val mintCtx: Option[MintContext] = existing.filter(_.colMap.nonEmpty)
       .map(s => new MintContext(mappingIdHighWater(s)))
@@ -2548,133 +1887,111 @@ object DeltaWrite {
       case None => (aligned, parts)
     }
 
-    // the distributed data job runs ONCE; CAS losers re-commit the
+    // the distributed data job runs ONCE; a lost race re-commits the
     // same files at a later version
     val newFiles = withStats(spark, fs, rootP,
       writeDataFiles(spark, physDf, rootP, fs, physParts,
         shredOk = existing.exists(shredOptIn)))
 
-    fs.mkdirs(logP) // casPublish stages its tmp inside the log dir
-    var snap = existing
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = snap.map(_.version + 1).getOrElse(0L)
-      val removes: Seq[String] = (mode, snap) match {
-        case (Mode.Overwrite, Some(s)) => s.files.keys.toSeq.sorted
-        case (Mode.DynamicOverwrite, Some(s)) =>
-          // newFiles carry PHYSICAL pv keys (decoded from the written
-          // dirs); the snapshot's are LOGICAL — compare physical
-          val touched = newFiles.map(_.partitionValues).distinct.toSet
-          def phys(pv: Map[String, String]): Map[String, String] =
-            if (s.colMap.isEmpty) pv
-            else pv.map { case (k, v) => s.colMap.getOrElse(k, k) -> v }
-          s.files.collect { case (p, pv) if touched.contains(phys(pv)) => p }
-            .toSeq.sorted
-        case _ => Nil
-      }
-      val content = commitContent(aligned, mode, parts, snap, newFiles, removes, next,
-        txn, mergeSchema, minted, identityHw, mappedOverwrite, newMaxColumnId)
-      if (publishCommit(fs, logP, next, content,
-            snap.map(_.configuration).getOrElse(Map.empty), snap)) {
-        autoCheckpoint(spark, rootP.toString, next,
-          snap.map(_.configuration).getOrElse(Map.empty))
-        return next
-      }
-      require(attempt < 50,
-        s"Delta commit at $path lost the version race $attempt times — giving up " +
-          "(another writer is committing continuously); the staged data files are " +
-          "unreferenced and safe to vacuum")
-      // lost the race: adopt the winner's snapshot, re-check layout
-      // compatibility (the winner may have re-partitioned or evolved
-      // the schema under us), recompute removes, retry
-      snap = Some(DeltaRead.snapshot(spark, rootP.toString))
+    // cdfHandled: an overwrite's changes are EXACTLY whole-file removes
+    // (DV descriptors carried) + whole-file adds — the shape CDF
+    // readers derive delete/insert changes from without cdc files
+    commitCreating(spark, path, if (mode == Mode.Append) "WRITE" else "OVERWRITE",
+        existing, removesData = mode != Mode.Append, cdfHandled = true) { snap =>
       // a RACING identity allocation moved the high-water mark under
       // us: the staged values may collide with the winner's — abort
       // loudly (the caller re-runs; delta-spark aborts the txn too)
-      if (identityHw.nonEmpty) {
-        val fresh = identitiesOf(snap.get).map(i => i.name -> i.highWater).toMap
+      if (identityHw.nonEmpty) snap.foreach { s =>
+        val fresh = identitiesOf(s).map(i => i.name -> i.highWater).toMap
         identities.foreach { old =>
-          if (fresh.get(old.name).exists(_ != old.highWater)) {
-            newFiles.foreach(f =>
-              try fs.delete(new Path(rootP, f.relPath), false)
-              catch { case scala.util.control.NonFatal(_) => () })
+          if (fresh.get(old.name).exists(_ != old.highWater))
             throw new IllegalStateException(
               s"identity allocation at $path conflicts: a concurrent writer moved " +
                 s"'${old.name}''s high-water mark — re-run the append")
-          }
         }
       }
       // the winner may have been this sink's own TWIN committing the
-      // same micro-batch — its txn mark now covers this batch, so this
-      // attempt's staged files are garbage: reclaim them and bow out
-      txn.foreach { case (appId, ver) =>
-        snap.foreach { s =>
-          if (s.txns.get(appId).exists(_ >= ver)) {
-            newFiles.foreach(f =>
-              try fs.delete(new Path(rootP, f.relPath), false)
-              catch { case scala.util.control.NonFatal(_) => () })
-            return s.version
+      // same micro-batch — its txn mark now covers this batch, so the
+      // staged files are garbage: the no-op reclaims them
+      val twin = txn.flatMap { case (appId, ver) =>
+        snap.filter(_.txns.get(appId).exists(_ >= ver)) }
+      twin match {
+        case Some(s) => NoOp(s.version)
+        case None =>
+          snap.foreach(requireCompatible(_, path, mode, parts, aligned, mergeSchema,
+            mintedIdMin))
+          val removes: Seq[String] = (mode, snap) match {
+            case (Mode.Overwrite, Some(s)) => s.files.keys.toSeq.sorted
+            case (Mode.DynamicOverwrite, Some(s)) =>
+              // newFiles carry PHYSICAL pv keys (decoded from the written
+              // dirs); the snapshot's are LOGICAL — compare physical
+              val touched = newFiles.map(_.partitionValues).distinct.toSet
+              def phys(pv: Map[String, String]): Map[String, String] =
+                if (s.colMap.isEmpty) pv
+                else pv.map { case (k, v) => s.colMap.getOrElse(k, k) -> v }
+              s.files.collect { case (p, pv) if touched.contains(phys(pv)) => p }
+                .toSeq.sorted
+            case _ => Nil
           }
-        }
+          Commit(writeActions(aligned, mode, parts, snap, newFiles, removes, txn,
+            mergeSchema, minted, identityHw, mappedOverwrite, newMaxColumnId), newFiles)
       }
-      snap.foreach { s =>
-        // a mapped OVERWRITE that minted ids cannot tolerate a winner
-        // who minted past them: the staged parquet and the prepared
-        // metaData carry THIS attempt's ids — re-committing would
-        // reuse the winner's (delta-spark aborts this conflict too)
-        if (mode == Mode.Overwrite && mintedIdMin.nonEmpty)
+    }
+  }
+
+  /** The layout and schema checks a write re-runs against every
+    * attempt's snapshot: the data files were staged once, against the
+    * snapshot the write started from, and a winner of the commit race
+    * may have re-partitioned, evolved or re-typed the table under them.
+    */
+  private def requireCompatible(s: DeltaRead.Snapshot, path: String, mode: Mode.Value,
+                                parts: Seq[String], aligned: DataFrame,
+                                mergeSchema: Boolean, mintedIdMin: Option[Long]): Unit = {
+    // a mapped OVERWRITE that minted ids cannot tolerate a winner who
+    // minted past them: the staged parquet and the prepared metaData
+    // carry THIS attempt's ids — re-committing would reuse the
+    // winner's (delta-spark aborts this conflict too)
+    if (mode == Mode.Overwrite && mintedIdMin.nonEmpty)
+      require(mappingIdHighWater(s) < mintedIdMin.get,
+        s"concurrent writer evolved the column-mapped Delta table $path " +
+          "mid-commit (column ids were minted past this overwrite's) — " +
+          "re-run the write")
+    if (mode != Mode.Overwrite) {
+      require(s.partitionColumns.map(_.toLowerCase) == parts.map(_.toLowerCase),
+        s"concurrent writer re-partitioned Delta table $path to " +
+          s"(${s.partitionColumns.mkString(", ")}) mid-commit — this " +
+          s"${mode.toString.toLowerCase} wrote (${parts.mkString(", ")}) layout; " +
+          "re-run the write")
+      if (!mergeSchema)
+        require(s.schema.fieldNames.map(_.toLowerCase).sorted.sameElements(
+                  aligned.schema.fieldNames.map(_.toLowerCase).sorted),
+          s"concurrent writer changed the schema of Delta table $path mid-commit — " +
+            "re-run the write against the new schema")
+      else {
+        // a MAPPED evolving append cannot tolerate a concurrent mint:
+        // the staged parquet already carries THIS attempt's physical
+        // names, and a winner who claimed the same ids (or the same
+        // logical columns under different physical names) would orphan
+        // them — abort loudly, never re-mint
+        if (mintedIdMin.nonEmpty)
           require(mappingIdHighWater(s) < mintedIdMin.get,
             s"concurrent writer evolved the column-mapped Delta table $path " +
-              "mid-commit (column ids were minted past this overwrite's) — " +
-              "re-run the write (its staged files are unreferenced)")
-        if (mode != Mode.Overwrite) {
-          require(s.partitionColumns.map(_.toLowerCase) == parts.map(_.toLowerCase),
-            s"concurrent writer re-partitioned Delta table $path to " +
-              s"(${s.partitionColumns.mkString(", ")}) mid-commit — this " +
-              s"${mode.toString.toLowerCase} wrote (${parts.mkString(", ")}) layout; " +
-              "re-run the write (its staged files are unreferenced)")
-          if (!mergeSchema)
-            require(s.schema.fieldNames.map(_.toLowerCase).sorted.sameElements(
-                      aligned.schema.fieldNames.map(_.toLowerCase).sorted),
-              s"concurrent writer changed the schema of Delta table $path mid-commit — " +
-                "re-run the write against the new schema (staged files are unreferenced)")
-          else {
-            // a MAPPED evolving append cannot tolerate a concurrent
-            // mint: the staged parquet already carries THIS attempt's
-            // physical names, and a winner who claimed the same ids
-            // (or the same logical columns under different physical
-            // names) would orphan them — abort loudly, never re-mint
-            if (mintedIdMin.nonEmpty) {
-              require(mappingIdHighWater(s) < mintedIdMin.get,
-                s"concurrent writer evolved the column-mapped Delta table $path " +
-                  "mid-commit (column ids were minted past this append's) — " +
-                  "re-run the write (its staged files are unreferenced)")
-            }
-            // an evolving append tolerates concurrent evolution — the
-            // retry's metaData re-unions against the winner's schema —
-            // but a TYPE conflict on any shared column is fatal
-            s.schema.fields.foreach { t =>
-              aligned.schema.fields.find(_.name.equalsIgnoreCase(t.name)).foreach { d =>
-                require(t.dataType.catalogString == d.dataType.catalogString,
-                  s"concurrent writer changed the type of column '${t.name}' of Delta " +
-                    s"table $path mid-commit (${d.dataType.catalogString} staged vs " +
-                    s"${t.dataType.catalogString} now) — re-run the write")
-              }
-            }
+              "mid-commit (column ids were minted past this append's) — " +
+              "re-run the write")
+        // an evolving append tolerates concurrent evolution — the
+        // retry's metaData re-unions against the winner's schema — but
+        // a TYPE conflict on any shared column is fatal
+        s.schema.fields.foreach { t =>
+          aligned.schema.fields.find(_.name.equalsIgnoreCase(t.name)).foreach { d =>
+            require(t.dataType.catalogString == d.dataType.catalogString,
+              s"concurrent writer changed the type of column '${t.name}' of Delta " +
+                s"table $path mid-commit (${d.dataType.catalogString} staged vs " +
+                s"${t.dataType.catalogString} now) — re-run the write")
           }
         }
       }
     }
-    -1L // unreachable
   }
-
-  private final case class NewFile(
-      relPath: String,
-      partitionValues: Map[String, String],
-      size: Long,
-      modificationTime: Long,
-      stats: String = null)
 
   /** Delta `add.stats` JSON (numRecords / minValues / maxValues /
     * nullCount) from the parquet FOOTERS of the just-renamed files —
@@ -2882,23 +2199,6 @@ object DeltaWrite {
       shredOk = shredOptIn(snap))
   }
 
-  /** A `cdc` action line: `dataChange=false` per the protocol (cdc
-    * files describe changes; they are not table data and never replay
-    * into the snapshot).
-    */
-  private def cdcLine(f: NewFile, now: Long): String = {
-    val c = mapper.createObjectNode
-    val cb = c.putObject("cdc")
-    cb.put("path", encodePath(f.relPath))
-    val pv = cb.putObject("partitionValues")
-    f.partitionValues.foreach { case (k, v) =>
-      if (v == null) pv.putNull(k) else pv.put(k, v)
-    }
-    cb.put("size", f.size)
-    cb.put("dataChange", false)
-    mapper.writeValueAsString(c)
-  }
-
   private def relativize(base: Path, p: Path): String = {
     val b = base.toUri.getPath.stripSuffix("/") + "/"
     val s = p.toUri.getPath
@@ -2939,59 +2239,29 @@ object DeltaWrite {
     }
   }
 
-  private def commitContent(df: DataFrame, mode: Mode.Value, parts: Seq[String],
-                            snap: Option[DeltaRead.Snapshot], adds: Seq[NewFile],
-                            removes: Seq[String], version: Long,
-                            txn: Option[(String, Long)] = None,
-                            mergeSchema: Boolean = false,
-                            minted: Seq[Minted] = Nil,
-                            identityHw: Map[String, Long] = Map.empty,
-                            mappedOverwrite: Option[org.apache.spark.sql.types.StructType]
-                              = None,
-                            newMaxColumnId: Option[Long] = None): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", if (mode == Mode.Append) "WRITE" else "OVERWRITE")
-    val op = cib.putObject("operationParameters")
-    op.put("mode", if (mode == Mode.Append) "Append" else "Overwrite")
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-
-    txn.foreach { case (appId, ver) =>
-      val tx = mapper.createObjectNode
-      val txb = tx.putObject("txn")
-      txb.put("appId", appId)
-      txb.put("version", ver)
-      txb.put("lastUpdated", now)
-      lines += mapper.writeValueAsString(tx)
-    }
-
-    if (version == 0L) {
-      val tf = typeFeatures(df.schema)
-      val pr = mapper.createObjectNode
-      val prb = pr.putObject("protocol")
-      if (tf.isEmpty) {
-        prb.put("minReaderVersion", 1)
-        prb.put("minWriterVersion", 2)
-      } else {
-        // variant / timestampNtz columns gate the table behind
-        // reader+writer features — a (1,2) protocol would let
-        // feature-unaware readers misparse the encoded values, so the
-        // table is CREATED straight in the features form
-        // (delta-spark's CREATE TABLE posture)
-        prb.put("minReaderVersion", 3)
-        prb.put("minWriterVersion", 7)
-        val rfa = prb.putArray("readerFeatures")
-        tf.toSeq.sorted.foreach(rfa.add)
-        val wfa = prb.putArray("writerFeatures")
-        (tf ++ impliedWriterFeatures(2)).toSeq.sorted.foreach(wfa.add)
-      }
-      lines += mapper.writeValueAsString(pr)
-    }
+  /** A write's actions: commitInfo, the streaming `txn` mark, the v0
+    * protocol, metaData when the schema, layout or identity marks
+    * change, removes of replaced files, adds of the new ones.
+    */
+  private def writeActions(df: DataFrame, mode: Mode.Value, parts: Seq[String],
+                           snap: Option[DeltaRead.Snapshot], adds: Seq[NewFile],
+                           removes: Seq[String], txn: Option[(String, Long)],
+                           mergeSchema: Boolean, minted: Seq[Minted],
+                           identityHw: Map[String, Long],
+                           mappedOverwrite: Option[org.apache.spark.sql.types.StructType],
+                           newMaxColumnId: Option[Long]): Seq[Action] = {
+    val actions = Seq.newBuilder[Action]
+    actions += CommitInfo(if (mode == Mode.Append) "WRITE" else "OVERWRITE",
+      Seq("mode" -> (if (mode == Mode.Append) "Append" else "Overwrite")))
+    txn.foreach { case (appId, ver) => actions += Txn(appId, ver) }
+    // variant / timestampNtz columns gate a new table behind
+    // reader+writer features — a (1,2) protocol would let
+    // feature-unaware readers misparse the encoded values, so the
+    // table is CREATED straight in the features form (delta-spark's
+    // CREATE TABLE posture)
+    if (snap.isEmpty)
+      actions += protocolAction(1, 2, Set.empty, Set.empty, typeFeatures(df.schema))
+        .getOrElse(Protocol(1, 2, None, None))
 
     // metaData at v0, on overwrites that change schema or layout, and
     // on mergeSchema appends that actually widened the schema —
@@ -3052,88 +2322,33 @@ object DeltaWrite {
         (mergeSchema && s.schema.json != schemaJson)
       })
     if (needMeta) {
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", snap.flatMap(s => Option(s.metaId))
-        .getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", schemaJson)
-      val pc = mdb.putArray("partitionColumns")
-      parts.foreach(pc.add)
       // CARRY the table configuration — a re-emitted metaData REPLACES
       // the old one, and dropping e.g. delta.appendOnly=true here would
       // silently disable an enforcement other writers rely on. A
       // mapped-table evolution bumps maxColumnId to the newest minted
       // id in the same action (the protocol's monotonic high-water).
-      val cfg = mdb.putObject("configuration")
-      val confOut = snap.map(_.configuration).getOrElse(Map.empty) ++
-        newMaxColumnId.map(m =>
-          Map("delta.columnMapping.maxColumnId" -> m.toString)).getOrElse(Map.empty)
-      confOut.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
+      actions += metaDataOf(snap, schemaJson, parts,
+        snap.map(_.configuration).getOrElse(Map.empty) ++
+          newMaxColumnId.map(m => "delta.columnMapping.maxColumnId" -> m.toString))
       // a schema change EVOLVING IN a variant / timestampNtz column
       // (mergeSchema append, full overwrite redefinition) upgrades the
       // protocol in the SAME commit — committing the new schema under
       // the old protocol would hand feature-unaware readers a type
       // they silently misparse. Plain appends never reach here
       // (needMeta false), so legacy tables aren't churned.
-      snap.filter(_ => version > 0L).foreach { s =>
+      snap.foreach { s =>
         import org.apache.spark.sql.types.{DataType, StructType}
-        val tf = typeFeatures(DataType.fromJson(schemaJson).asInstanceOf[StructType])
-        protocolUpgradeForTypes(s, tf).foreach(lines += _)
+        actions ++= protocolAction(s,
+          typeFeatures(DataType.fromJson(schemaJson).asInstanceOf[StructType]))
       }
     }
-
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      snap.flatMap(_.dvs.get(p)).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", true)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-
-    lines.result().mkString("\n") + "\n"
+    removes.foreach(p => actions += Remove(p, dataChange = true, snap.flatMap(_.dvs.get(p))))
+    adds.foreach(f => actions += addOf(f))
+    actions.result()
   }
 
   // ----- maintenance: OPTIMIZE + VACUUM -------------------------------
 
-  /** OPTIMIZE-style compaction: rewrite the current snapshot into
-    * `targetFiles` files (one per live partition tuple on partitioned
-    * tables) and commit the swap with `dataChange=false` on every
-    * add/remove — the protocol's "no new rows" marker, so streaming
-    * sources (ours and delta-spark's) do NOT re-stream the rewritten
-    * rows and a mid-stream compaction is invisible. Old files stay on
-    * disk for time travel until [[vacuum]]. No-op (returns the current
-    * version) when the table already has <= targetFiles files.
-    *
-    * Concurrency: the data job runs once; the commit retries through
-    * the CAS loop like every write, BUT a competitor that removed or
-    * replaced any file this compaction folded makes the rewrite stale
-    * (committing it would resurrect dead rows) — that aborts loudly
-    * with the staged files unreferenced, delta-spark OPTIMIZE's
-    * conflict posture. A competitor that only APPENDED is compatible:
-    * its files simply carry into the new snapshot untouched.
-    */
   /** SET/UNSET TBLPROPERTIES: one metaData-only commit replacing the
     * table configuration with `current ++ set -- unset` (schema, id,
     * partitioning, and files all carry). Enabling
@@ -3152,175 +2367,70 @@ object DeltaWrite {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = false)
+    def on(key: String) = set.get(key).exists(_.equalsIgnoreCase("true"))
+    commit(spark, path, "SET TBLPROPERTIES", latestSnapshot(spark, path),
+        removesData = false) { snap =>
       val next = snap.version + 1
       // ICT ENABLEMENT (writer feature `inCommitTimestamp`): the
       // enabling commit itself must carry a stamped commitInfo, and a
       // table enabled after creation records the enablement provenance
       // the protocol's timestamp time travel reads (which version the
-      // ICT clock starts at, and its first value)
-      val enablingIct = set.get("delta.enableInCommitTimestamps")
-        .exists(_.equalsIgnoreCase("true")) && !ictEnabled(snap.configuration)
+      // ICT clock starts at, and its first value) — so the stamp is
+      // pinned here, where the provenance needs it
+      val enablingIct = on("delta.enableInCommitTimestamps") &&
+        !ictEnabled(snap.configuration)
       val ict = if (enablingIct || ictEnabled(snap.configuration))
         Some(nextIct(fs, logP, next)) else None
       val provenance = if (!enablingIct) Map.empty[String, String] else Map(
         "delta.inCommitTimestampEnablementVersion" -> next.toString,
         "delta.inCommitTimestampEnablementTimestamp" -> ict.get.toString)
       val newConf = (snap.configuration ++ set ++ provenance) -- unset
-      if (newConf == snap.configuration) return snap.version
-      val now = System.currentTimeMillis
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", now)
-      ict.foreach(cib.put("inCommitTimestamp", _))
-      cib.put("operation", "SET TBLPROPERTIES")
-      val op = cib.putObject("operationParameters")
-      op.put("properties",
-        mapper.writeValueAsString(mapper.valueToTree(newConf): com.fasterxml.jackson.databind.JsonNode))
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      // property-gated features need the protocol to carry them:
-      // enabling CDF → changeDataFeed (legacy minWriter 4), adding a
-      // delta.constraints.* key → checkConstraints (legacy minWriter 3),
-      // enabling ICT → inCommitTimestamp (table-features only: 7)
-      // ROW TRACKING enablement (delta.enableRowTracking = true): the
-      // protocol gains rowTracking + domainMetadata (the hwm domain
-      // lives there), and every live file that carries no baseRowId is
-      // BACKFILLED — re-added dataChange=false in this same commit so
-      // [[stampRowTracking]] assigns it a fresh range (delta-spark's
-      // ALTER TABLE enablement runs the same backfill). Zero data I/O:
-      // the re-adds are log actions over the existing files.
-      val enablingRowTracking = set.get("delta.enableRowTracking")
-        .exists(_.equalsIgnoreCase("true")) &&
-        !(snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking"))
-      val needs = Seq(
-        "changeDataFeed" -> (4, set.get("delta.enableChangeDataFeed")
-          .exists(_.equalsIgnoreCase("true"))),
-        "checkConstraints" -> (3, set.keys.exists(_.startsWith("delta.constraints."))),
-        "inCommitTimestamp" -> (7, enablingIct),
-        "rowTracking" -> (7, enablingRowTracking),
-        "domainMetadata" -> (7, enablingRowTracking &&
-          !(snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata"))))
-        .collect { case (f, (lv, true)) => f -> lv }
-      // `delta.checkpointPolicy = v2` requires the v2Checkpoint READER
-      // feature (spec: the policy is illegal without it) — upgrade to
-      // the table-features protocol in the same commit, folding any
-      // writer features this call also needs into the one protocol
-      // action (two protocol lines would clobber each other)
-      val needV2Ckpt = set.get("delta.checkpointPolicy").contains("v2") &&
-        !(snap.minReader >= 3 && snap.readerFeatures.contains("v2Checkpoint"))
-      // VARIANT SHREDDING opt-in (`delta.enableVariantShredding=true`,
-      // delta-spark's preview property): future variant writes keep
-      // Spark's shredded layout ([[writeDataFiles]] stops pinning it
-      // off), which the variantShredding-preview READER feature gates —
-      // and shredded files are still variant files, so the base
-      // variantType feature rides along when missing.
-      val needVarShred = set.get("delta.enableVariantShredding")
-        .exists(_.equalsIgnoreCase("true")) &&
-        !(snap.minReader >= 3 &&
-          snap.readerFeatures.contains("variantShredding-preview"))
-      val readerNeeds =
-        (if (needV2Ckpt) Seq("v2Checkpoint") else Nil) ++
-        (if (needVarShred)
-          Seq("variantShredding-preview") ++
-            (if (snap.minReader >= 3 && snap.readerFeatures.contains("variantType")) Nil
-             else Seq("variantType"))
-         else Nil)
-      if (readerNeeds.nonEmpty) {
-        protocolUpgradeToAll(snap, readerNeeds, needs.map(_._1)).foreach(lines += _)
-      } else if (needs.nonEmpty) {
-        if (snap.minWriter >= 7) {
-          val missing = needs.map(_._1).filterNot(snap.writerFeatures.contains)
-          if (missing.nonEmpty) {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", snap.minWriter)
-            if (snap.minReader >= 3) {
-              val rfa = pb.putArray("readerFeatures")
-              snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-            }
-            val wfa = pb.putArray("writerFeatures")
-            (snap.writerFeatures ++ missing).toSeq.sorted.foreach(wfa.add)
-            lines += mapper.writeValueAsString(p)
-          }
-        } else {
-          val target = needs.map(_._2).max
-          if (target >= 7) {
-            // a v7-only feature (inCommitTimestamp) on a legacy table:
-            // minWriter 7 REQUIRES the writerFeatures list, so expand
-            // the legacy versions to their implied names and add the
-            // needed features — reader version stays untouched
-            val legacyWriter = impliedWriterFeatures(snap.minWriter)
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", 7)
-            val wfa = pb.putArray("writerFeatures")
-            (legacyWriter ++ needs.map(_._1)).distinct.sorted.foreach(wfa.add)
-            lines += mapper.writeValueAsString(p)
-          } else if (snap.minWriter < target) {
-            val p = mapper.createObjectNode
-            val pb = p.putObject("protocol")
-            pb.put("minReaderVersion", snap.minReader)
-            pb.put("minWriterVersion", target)
-            lines += mapper.writeValueAsString(p)
-          }
-        }
-      }
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(snap.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", snap.schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      snap.partitionColumns.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      newConf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-      // row-tracking backfill: re-add every live file lacking ids
-      // (dataChange=false; pv keys go back to PHYSICAL under mapping) —
-      // stampRowTracking below assigns the ranges and the hwm domain
-      if (enablingRowTracking) {
-        snap.files.keys.toSeq.sorted
-          .filterNot(snap.rowIds.contains).foreach { rel =>
-            val ad = mapper.createObjectNode
-            val adb = ad.putObject("add")
-            adb.put("path", encodePath(rel))
-            val pv = adb.putObject("partitionValues")
-            snap.files(rel).foreach { case (k, v) =>
-              val pk = snap.colMap.getOrElse(k, k)
-              if (v == null) pv.putNull(pk) else pv.put(pk, v)
-            }
-            adb.put("size", snap.sizes.getOrElse(rel, -1L))
-            adb.put("modificationTime", now)
-            adb.put("dataChange", false)
-            snap.stats.get(rel).foreach(adb.put("stats", _))
-            snap.dvs.get(rel).foreach(putDv(adb, _))
-            lines += mapper.writeValueAsString(ad)
-          }
-      }
-      // plain CAS: the commitInfo above already carries the ICT stamp
-      // (recomputed per attempt) when the table pins or gains it
-      val content = stampRowTracking(next, lines.result().mkString("\n") + "\n",
-        Some(snap))
-      if (graft.pipeline.VersionedTable.casPublish(
-            fs, new Path(logP, f"$next%020d.json"), content)) {
-        writeVersionChecksum(fs, logP, next, content, Some(snap))
-        return next
+      if (newConf == snap.configuration) NoOp(snap.version)
+      else {
+        // ROW TRACKING enablement (delta.enableRowTracking = true): the
+        // protocol gains rowTracking + domainMetadata (the hwm domain
+        // lives there), and every live file that carries no baseRowId is
+        // BACKFILLED — re-added dataChange=false in this same commit so
+        // the publish's row-tracking stamp assigns it a fresh range
+        // (delta-spark's ALTER TABLE enablement runs the same backfill).
+        // Zero data I/O: the re-adds are log actions over the existing
+        // files.
+        val enablingRowTracking = on("delta.enableRowTracking") &&
+          !(snap.minWriter >= 7 && snap.writerFeatures.contains("rowTracking"))
+        // property-gated features the protocol must carry: CDF →
+        // changeDataFeed, a delta.constraints.* key → checkConstraints,
+        // ICT → inCommitTimestamp, row tracking → rowTracking +
+        // domainMetadata, `delta.checkpointPolicy = v2` → the
+        // v2Checkpoint READER feature (the policy is illegal without
+        // it), and the VARIANT SHREDDING opt-in
+        // (`delta.enableVariantShredding`, delta-spark's preview
+        // property: future variant writes keep Spark's shredded layout,
+        // see [[shredOptIn]]) → the variantShredding-preview reader
+        // feature plus the base variantType one shredded files still
+        // need
+        val shred = on("delta.enableVariantShredding")
+        val features = Seq(
+          "changeDataFeed" -> on("delta.enableChangeDataFeed"),
+          "checkConstraints" -> set.keys.exists(_.startsWith("delta.constraints.")),
+          "inCommitTimestamp" -> enablingIct,
+          "rowTracking" -> enablingRowTracking,
+          "domainMetadata" -> enablingRowTracking,
+          "v2Checkpoint" -> set.get("delta.checkpointPolicy").contains("v2"),
+          "variantShredding-preview" -> shred,
+          "variantType" -> shred).collect { case (f, true) => f }.toSet
+        val backfill =
+          if (!enablingRowTracking) Nil
+          else snap.files.keys.toSeq.sorted.filterNot(snap.rowIds.contains).map(rel =>
+            reAdd(snap, rel, dataChange = false, snap.dvs.get(rel)))
+        Commit(Seq(CommitInfo("SET TBLPROPERTIES", Seq("properties" ->
+            mapper.writeValueAsString(
+              mapper.valueToTree(newConf): com.fasterxml.jackson.databind.JsonNode)),
+            ict)) ++
+          protocolAction(snap, features) ++
+          Seq(metaDataOf(Some(snap), snap.schema.json, snap.partitionColumns, newConf)) ++
+          backfill)
       }
     }
-    throw new IllegalStateException(
-      s"SET TBLPROPERTIES at $path lost the commit race 20 times — another " +
-        "writer is committing continuously; retry later")
   }
 
   /** Set (or update) one metadata DOMAIN (writer feature
@@ -3394,62 +2504,35 @@ object DeltaWrite {
                                  configuration: String, removed: Boolean,
                                  operation: String): Long = {
     require(domain != null && domain.nonEmpty, "domain must be non-empty")
-    val rootP = qualifiedRoot(spark, path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val snap = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(snap, path, removesData = false)
-      if (removed && !snap.domains.contains(domain)) return snap.version
-      val next = snap.version + 1
-      val lines = Seq.newBuilder[String]
-      val ci = mapper.createObjectNode
-      val cib = ci.putObject("commitInfo")
-      cib.put("timestamp", System.currentTimeMillis)
-      cib.put("operation", operation)
-      val op = cib.putObject("operationParameters")
-      op.put("domain", domain)
-      cib.put("engineInfo", "graft-delta-writer/1.0")
-      lines += mapper.writeValueAsString(ci)
-      // first domain write on a table without the feature: upgrade to
-      // the v7 features form carrying it (legacy writer versions
-      // expand to their implied feature names, same as the ICT upgrade)
-      val hasFeature = snap.minWriter >= 7 && snap.writerFeatures.contains("domainMetadata")
-      if (!hasFeature) {
-        val existing = if (snap.minWriter >= 7) snap.writerFeatures.toSeq
-          else impliedWriterFeatures(snap.minWriter)
-        val p = mapper.createObjectNode
-        val pb = p.putObject("protocol")
-        pb.put("minReaderVersion", snap.minReader)
-        pb.put("minWriterVersion", 7)
-        if (snap.minReader >= 3) {
-          val rfa = pb.putArray("readerFeatures")
-          snap.readerFeatures.toSeq.sorted.foreach(rfa.add)
-        }
-        val wfa = pb.putArray("writerFeatures")
-        (existing :+ "domainMetadata").distinct.sorted.foreach(wfa.add)
-        lines += mapper.writeValueAsString(p)
-      }
-      val dm = mapper.createObjectNode
-      val dmb = dm.putObject("domainMetadata")
-      dmb.put("domain", domain)
-      dmb.put("configuration", Option(configuration).getOrElse(""))
-      dmb.put("removed", removed)
-      lines += mapper.writeValueAsString(dm)
-      if (publishCommit(fs, logP, next, lines.result().mkString("\n") + "\n",
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
-      }
+    commit(spark, path, operation, latestSnapshot(spark, path), removesData = false) { snap =>
+      if (removed && !snap.domains.contains(domain)) NoOp(snap.version)
+      else Commit(Seq(CommitInfo(operation, Seq("domain" -> domain))) ++
+        // first domain write on a table without the feature moves it to
+        // the v7 features form carrying it
+        protocolAction(snap, Set("domainMetadata")) ++
+        Seq(DomainMetadata(domain, configuration, removed)))
     }
-    throw new IllegalStateException(
-      s"$operation at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
-  /** OPTIMIZE-style rewrite. `zorderBy` turns it into OPTIMIZE ZORDER
+  /** OPTIMIZE-style compaction: rewrite the current snapshot into
+    * `targetFiles` files (one per live partition tuple on partitioned
+    * tables) and commit the swap with `dataChange=false` on every
+    * add/remove — the protocol's "no new rows" marker, so streaming
+    * sources (ours and delta-spark's) do NOT re-stream the rewritten
+    * rows and a mid-stream compaction is invisible. Old files stay on
+    * disk for time travel until [[vacuum]]. No-op (returns the current
+    * version) when the table already has <= targetFiles files.
+    *
+    * Concurrency: the data job runs once; the commit retries through
+    * the commit loop like every write, BUT a competitor that removed,
+    * replaced or DV-deleted rows in any file this compaction folded
+    * makes the rewrite stale (committing it would resurrect dead rows)
+    * — that aborts loudly and deletes the staged files, delta-spark
+    * OPTIMIZE's conflict posture. A competitor that only APPENDED is
+    * compatible: its files simply carry into the new snapshot
+    * untouched.
+    *
+    * `zorderBy` turns it into OPTIMIZE ZORDER
     * (delta-spark's `OPTIMIZE … ZORDER BY` shape): the snapshot is
     * rewritten as `zorderFiles` Morton-clustered files
     * ([[graft.operators.ZOrder.cluster]]) so parquet min/max stats
@@ -3466,8 +2549,7 @@ object DeltaWrite {
     require(zorderFiles >= 1, s"zorderFiles must be >= 1: $zorderFiles")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var snap = DeltaRead.snapshot(spark, rootP.toString)
+    val snap = DeltaRead.snapshot(spark, rootP.toString)
     // dataChange=false repackaging — permitted on append-only tables;
     // column-mapped tables rewrite through toPhysical (logical scan,
     // physical-named output)
@@ -3533,7 +2615,7 @@ object DeltaWrite {
     // the DV identity each folded file is rewritten AGAINST — a
     // concurrent DELETE growing a folded file's DV makes the staged
     // rewrite stale (committing it would resurrect the newly deleted
-    // rows); checked on every CAS retry, purgeDvs' guard
+    // rows); checked on every commit attempt, purgeDvs' guard
     val origDv: Map[String, String] = folded.iterator.map(rel =>
       rel -> snap.dvs.get(rel).map(_.uniqueId).getOrElse("")).toMap
     val parts = snap.partitionColumns
@@ -3572,50 +2654,28 @@ object DeltaWrite {
       writeDataFiles(spark, physDf, rootP, fs, physParts,
         shredOk = shredOptIn(snap)))
 
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = snap.version + 1
-      val removes = folded.toSeq.sorted
-      // the marker claims "every file live at `next` is clustered" —
-      // a competitor's files that appeared between the base snapshot
-      // and this attempt would be live at `next` WITHOUT being
-      // clustered, so the marker is omitted when any exist (the next
-      // maintenance cycle re-clusters both them and this run's
-      // outputs; an under-claimed marker is always safe, an
-      // over-claimed one skips files forever)
-      val foreignNew = snap.files.keySet -- folded -- alreadyClustered
-      if (publishCommit(fs, logP, next,
-            compactContent(newFiles, removes, snap.dvs,
-              clusteredAt = if (implicitClustering && canMark && foreignNew.isEmpty)
-                Some(next) else None),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
-      }
-      require(attempt < 50, s"Delta compaction at $path lost the version race " +
-        s"$attempt times — giving up; staged files are unreferenced")
-      snap = DeltaRead.snapshot(spark, rootP.toString)
+    commit(spark, path, "OPTIMIZE", snap, removesData = false) { s =>
       // stale if a folded file is GONE (rewritten/removed) or its DV
       // IDENTITY moved (a concurrent DV DELETE soft-deleted rows this
       // rewrite materialized as live — committing would resurrect them)
-      val stale = folded.exists { rel =>
-        !snap.files.contains(rel) ||
-          snap.dvs.get(rel).map(_.uniqueId).getOrElse("") != origDv(rel)
-      }
-      if (stale) {
-        newFiles.foreach(f =>
-          try fs.delete(new Path(rootP, f.relPath), false)
-          catch { case scala.util.control.NonFatal(_) => () })
+      if (folded.exists(rel => !s.files.contains(rel) ||
+            s.dvs.get(rel).map(_.uniqueId).getOrElse("") != origDv(rel)))
         throw new IllegalStateException(
           s"Delta compaction at $path aborted: a concurrent commit removed, " +
             "replaced or DV-deleted rows in a file this compaction folded — " +
             "committing the rewrite would resurrect dead rows. Re-run the " +
             "compaction against the new snapshot")
-      }
-      // appends-only competitor: retry the same rewrite at the next version
+      // the marker claims "every file live at this commit is clustered"
+      // — a competitor's files that appeared since the base snapshot
+      // would be live WITHOUT being clustered, so the marker is omitted
+      // when any exist (the next maintenance cycle re-clusters both them
+      // and this run's outputs; an under-claimed marker is always safe,
+      // an over-claimed one skips files forever)
+      val foreignNew = s.files.keySet -- folded -- alreadyClustered
+      Commit(optimizeActions(s, folded.toSeq.sorted, newFiles,
+        clusteredAt = if (implicitClustering && canMark && foreignNew.isEmpty)
+          Some(s.version + 1) else None), newFiles)
     }
-    -1L // unreachable
   }
 
   /** RESTORE the table to the state of `toVersion` — delta-spark's
@@ -3640,13 +2700,9 @@ object DeltaWrite {
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
     val target = DeltaRead.snapshot(spark, rootP.toString, Some(toVersion))
-    var attempt = 0
-    while (attempt < 20) {
-      attempt += 1
-      val cur = DeltaRead.snapshot(spark, rootP.toString)
-      requireWritable(cur, path, removesData = true, cdfHandled = true)
+    commit(spark, path, "RESTORE", latestSnapshot(spark, path),
+        removesData = true, cdfHandled = true) { cur =>
       // COLUMN MAPPING: physical names pin every file binding, so a
       // mapped restore is the same file+metaData rewind — EXCEPT
       // delta.columnMapping.maxColumnId, which the spec keeps
@@ -3666,171 +2722,111 @@ object DeltaWrite {
       if (cur.files == target.files && cur.dvs == target.dvs &&
           cur.schema.json == target.schema.json &&
           cur.partitionColumns == target.partitionColumns &&
-          cur.configuration == effConf) return cur.version // already there
-      // (config/partition-only drift past the file check → restoreContent
-      // emits a metaData-only commit: restore restores config too)
-      // every re-instated file (and its on-disk DV) must still exist —
-      // vacuum may have reclaimed history past the retention window
-      val returning = (target.files.keySet -- cur.files.keySet).toSeq.sorted
-      returning.foreach { rel =>
-        require(fs.exists(new Path(rootP, rel)),
-          s"cannot restore $path to v$toVersion: data file $rel was already " +
-            "vacuumed — restore only reaches versions within the vacuum retention")
-      }
-      target.dvs.foreach { case (rel, d) =>
-        if (d.storageType == "u")
-          require(fs.exists(DeletionVectors.onDiskPath(rootP, d.pathOrInlineDv)),
-            s"cannot restore $path to v$toVersion: the deletion vector of $rel " +
-              "was already vacuumed")
-      }
-      // CHANGE DATA FEED: a restore's changes are the retired files'
-      // LIVE rows (deletes) plus the re-instated files' live rows
-      // (inserts) — delta-spark RESTORE's file-granular CDC shape (a
-      // DV-only change reports its file as delete-all + insert-all
-      // churn; consumers key-reconcile). Rows land under the TARGET's
-      // schema/layout (what the table has after this commit); old-only
-      // columns null out, the same by-name rule the span reader uses.
-      // This is the one restore path that is not zero-data-I/O — it
-      // reads exactly the changed files once.
-      val cdcFiles: Seq[NewFile] =
-        if (!cdfEnabled(cur)) Nil
-        else {
-          def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
-            m.get(rel).map(_.uniqueId).getOrElse("")
-          val rm = cur.files.keySet.filter(rel =>
-            !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-          val ad = target.files.keySet.filter(rel =>
-            !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-          // rowTracking: both sides' ids are attributable — retired
-          // rows carry the HEAD's ids, re-instated rows the target
-          // version's (restore re-adds embed their original baseRowId)
-          // — so the cdc rows key the id-surfacing CDF read directly
-          def canIds(s: DeltaRead.Snapshot, rels: Set[String]): Boolean =
-            s.minWriter >= 7 && s.writerFeatures.contains("rowTracking") &&
-              rels.forall(s.rowIds.contains)
-          def slice(s: DeltaRead.Snapshot, rels: Set[String]): DataFrame = {
-            val sub = s.copy(files = s.files.filter(kv => rels.contains(kv._1)))
-            if (canIds(s, rels))
-              DeltaRead.readSnapshotRowIds(spark, rootP.toString, sub,
-                DeltaRead.CdcRowIdCol)
-            else DeltaRead.readSnapshot(spark, rootP.toString, sub)
-          }
-          val pieces = Seq.newBuilder[DataFrame]
-          if (rm.nonEmpty)
-            pieces += slice(cur, rm).withColumn("_change_type", lit("delete"))
-          if (ad.nonEmpty)
-            pieces += slice(target, ad).withColumn("_change_type", lit("insert"))
-          pieces.result().reduceOption((a, b) =>
-            a.unionByName(b, allowMissingColumns = true)) match {
-            case None => Nil
-            case Some(ch) =>
-              val aligned = ch.select(
-                target.schema.fieldNames.map(n =>
-                  if (ch.columns.exists(_.equalsIgnoreCase(n))) col(n)
-                  else lit(null).cast(target.schema(n).dataType).as(n))
-                ++ Seq(col("_change_type")) ++
-                (if (ch.columns.contains(DeltaRead.CdcRowIdCol))
-                  Seq(col(DeltaRead.CdcRowIdCol)) else Nil): _*)
-              if (aligned.isEmpty) Nil
-              else writeCdcFiles(spark, target, aligned, rootP, fs)
-          }
+          cur.configuration == effConf) NoOp(cur.version) // already there
+      else {
+        // (config/partition-only drift past the file check → restoreActions
+        // emits a metaData-only commit: restore restores config too)
+        // every re-instated file (and its on-disk DV) must still exist —
+        // vacuum may have reclaimed history past the retention window
+        val returning = (target.files.keySet -- cur.files.keySet).toSeq.sorted
+        returning.foreach { rel =>
+          require(fs.exists(new Path(rootP, rel)),
+            s"cannot restore $path to v$toVersion: data file $rel was already " +
+              "vacuumed — restore only reaches versions within the vacuum retention")
         }
-      val next = cur.version + 1
-      if (publishCommit(fs, logP, next,
-            restoreContent(cur, target, toVersion, cdcFiles, effConf),
-            effConf, Some(cur))) {
-        autoCheckpoint(spark, rootP.toString, next, effConf)
-        return next
+        target.dvs.foreach { case (rel, d) =>
+          if (d.storageType == "u")
+            require(fs.exists(DeletionVectors.onDiskPath(rootP, d.pathOrInlineDv)),
+              s"cannot restore $path to v$toVersion: the deletion vector of $rel " +
+                "was already vacuumed")
+        }
+        // a file is "the same" only as (path, dv identity) — a file whose
+        // DV CHANGED retires its current identity and re-adds the target's
+        def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
+          m.get(rel).map(_.uniqueId).getOrElse("")
+        val rm = cur.files.keySet.filter(rel =>
+          !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
+        val ad = target.files.keySet.filter(rel =>
+          !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
+        // CHANGE DATA FEED: a restore's changes are the retired files'
+        // LIVE rows (deletes) plus the re-instated files' live rows
+        // (inserts) — delta-spark RESTORE's file-granular CDC shape (a
+        // DV-only change reports its file as delete-all + insert-all
+        // churn; consumers key-reconcile). Rows land under the TARGET's
+        // schema/layout (what the table has after this commit); old-only
+        // columns null out, the same by-name rule the span reader uses.
+        // This is the one restore path that is not zero-data-I/O — it
+        // reads exactly the changed files once.
+        val cdcFiles: Seq[NewFile] =
+          if (!cdfEnabled(cur)) Nil
+          else {
+            // rowTracking: both sides' ids are attributable — retired
+            // rows carry the HEAD's ids, re-instated rows the target
+            // version's (restore re-adds embed their original baseRowId)
+            // — so the cdc rows key the id-surfacing CDF read directly
+            def canIds(s: DeltaRead.Snapshot, rels: Set[String]): Boolean =
+              s.minWriter >= 7 && s.writerFeatures.contains("rowTracking") &&
+                rels.forall(s.rowIds.contains)
+            def slice(s: DeltaRead.Snapshot, rels: Set[String]): DataFrame = {
+              val sub = s.copy(files = s.files.filter(kv => rels.contains(kv._1)))
+              if (canIds(s, rels))
+                DeltaRead.readSnapshotRowIds(spark, rootP.toString, sub,
+                  DeltaRead.CdcRowIdCol)
+              else DeltaRead.readSnapshot(spark, rootP.toString, sub)
+            }
+            val pieces = Seq.newBuilder[DataFrame]
+            if (rm.nonEmpty)
+              pieces += slice(cur, rm).withColumn("_change_type", lit("delete"))
+            if (ad.nonEmpty)
+              pieces += slice(target, ad).withColumn("_change_type", lit("insert"))
+            pieces.result().reduceOption((a, b) =>
+              a.unionByName(b, allowMissingColumns = true)) match {
+              case None => Nil
+              case Some(ch) =>
+                val aligned = ch.select(
+                  target.schema.fieldNames.map(n =>
+                    if (ch.columns.exists(_.equalsIgnoreCase(n))) col(n)
+                    else lit(null).cast(target.schema(n).dataType).as(n))
+                  ++ Seq(col("_change_type")) ++
+                  (if (ch.columns.contains(DeltaRead.CdcRowIdCol))
+                    Seq(col(DeltaRead.CdcRowIdCol)) else Nil): _*)
+                if (aligned.isEmpty) Nil
+                else writeCdcFiles(spark, target, aligned, rootP, fs)
+            }
+          }
+        // a lost race reclaims the staged cdc files and re-derives
+        // against the winner's head
+        Commit(restoreActions(cur, target, toVersion, rm, ad, cdcFiles, effConf),
+          cdcFiles, reclaimOnLoss = true)
       }
-      // lost the race: re-derive against the winner's head (the staged
-      // cdc files are stale against it — reclaim)
-      cdcFiles.foreach(f =>
-        try fs.delete(new Path(rootP, f.relPath), false)
-        catch { case scala.util.control.NonFatal(_) => () })
     }
-    throw new IllegalStateException(
-      s"RESTORE at $path lost the commit race 20 times — another writer is " +
-        "committing continuously; retry later")
   }
 
-  private def restoreContent(cur: DeltaRead.Snapshot, target: DeltaRead.Snapshot,
-                             toVersion: Long,
-                             cdcFiles: Seq[NewFile] = Nil,
-                             effConf: Map[String, String] = null): String = {
-    val restoredConf = Option(effConf).getOrElse(target.configuration)
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "RESTORE")
-    cib.putObject("operationParameters").put("version", toVersion)
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    cdcFiles.foreach(f => lines += cdcLine(f, now))
+  /** RESTORE's actions: `toRemove` are the head's file identities the
+    * target lacks, `toAdd` the target's the head lacks.
+    */
+  private def restoreActions(cur: DeltaRead.Snapshot, target: DeltaRead.Snapshot,
+                             toVersion: Long, toRemove: Set[String], toAdd: Set[String],
+                             cdcFiles: Seq[NewFile],
+                             restoredConf: Map[String, String]): Seq[Action] = {
     // metaData re-emit when schema/partitioning drifted — CARRYING the
     // table id and the TARGET's configuration (restore restores config)
-    if (cur.schema.json != target.schema.json ||
-        cur.partitionColumns != target.partitionColumns ||
-        cur.configuration != restoredConf) {
-      val md = mapper.createObjectNode
-      val mdb = md.putObject("metaData")
-      mdb.put("id", Option(cur.metaId).getOrElse(java.util.UUID.randomUUID.toString))
-      val fmt = mdb.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdb.put("schemaString", target.schema.json)
-      val pc = mdb.putArray("partitionColumns")
-      target.partitionColumns.foreach(pc.add)
-      val cfg = mdb.putObject("configuration")
-      restoredConf.toSeq.sortBy(_._1).foreach { case (k, v) => cfg.put(k, v) }
-      mdb.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
-    // a file is "the same" only as (path, dv identity) — a file whose
-    // DV CHANGED retires its current identity and re-adds the target's
-    def uid(m: Map[String, DeletionVectors.Descriptor], rel: String): String =
-      m.get(rel).map(_.uniqueId).getOrElse("")
-    val toRemove = cur.files.keySet.filter(rel =>
-      !target.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-    val toAdd = target.files.keySet.filter(rel =>
-      !cur.files.contains(rel) || uid(cur.dvs, rel) != uid(target.dvs, rel))
-    toRemove.toSeq.sorted.foreach { rel =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(rel))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", true)
-      cur.dvs.get(rel).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    toAdd.toSeq.sorted.foreach { rel =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(rel))
-      val pv = adb.putObject("partitionValues")
-      // Snapshot pv keys are LOGICAL; the log's are PHYSICAL under
-      // column mapping — translate back on the way out (delete's rule)
-      target.files(rel).foreach { case (k, v) =>
-        val pk = target.colMap.getOrElse(k, k)
-        if (v == null) pv.putNull(pk) else pv.put(pk, v)
-      }
-      adb.put("size", target.sizes.getOrElse(rel, -1L))
-      adb.put("modificationTime", now)
-      adb.put("dataChange", true)
-      target.stats.get(rel).foreach(adb.put("stats", _))
-      target.dvs.get(rel).foreach(putDv(adb, _))
+    val meta =
+      if (cur.schema.json != target.schema.json ||
+          cur.partitionColumns != target.partitionColumns ||
+          cur.configuration != restoredConf)
+        Some(metaDataOf(Some(cur), target.schema.json, target.partitionColumns,
+          restoredConf))
+      else None
+    Seq(CommitInfo("RESTORE", Seq("version" -> toVersion))) ++
+      cdcFiles.map(cdcOf) ++ meta ++
+      toRemove.toSeq.sorted.map(rel => Remove(rel, dataChange = true, cur.dvs.get(rel))) ++
       // row tracking: a restored file's rows are the SAME physical rows
-      // they were at the target version — embed their original ids so
-      // stampRowTracking carries instead of reassigning (the hwm only
-      // ever rises, so the old range is still covered)
-      target.rowIds.get(rel).foreach { case (brid, dcv) =>
-        adb.put("baseRowId", brid)
-        if (dcv >= 0L) adb.put("defaultRowCommitVersion", dcv)
-      }
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
+      // they were at the target version — its original ids ride the
+      // re-add, so the publish's stamp carries instead of reassigning
+      // (the hwm only ever rises, so the old range is still covered)
+      toAdd.toSeq.sorted.map(rel =>
+        reAdd(target, rel, dataChange = true, target.dvs.get(rel), withRowIds = true))
   }
 
   /** MATERIALIZE-DVs-ONLY OPTIMIZE (delta-spark's `REORG TABLE …
@@ -3847,9 +2843,9 @@ object DeltaWrite {
     * (its fraction is unknowable; the point is shedding the mask).
     * Returns the current version untouched when nothing crosses the
     * threshold. Concurrency: same posture as [[compact]] — a
-    * competitor that removed/replaced a folded file aborts loudly
-    * (committing would resurrect its dead rows); pure appenders are
-    * compatible and the commit retries.
+    * competitor that removed/replaced a folded file or changed its DV
+    * aborts loudly (committing would resurrect its dead rows); pure
+    * appenders are compatible and the commit retries.
     */
   def purgeDvs(spark: SparkSession, path: String,
                minDeletedFraction: Double = 0.05): Long = {
@@ -3857,8 +2853,7 @@ object DeltaWrite {
       s"minDeletedFraction must be in [0,1]: $minDeletedFraction")
     val rootP = qualifiedRoot(spark, path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logP = new Path(rootP, "_delta_log")
-    var snap = DeltaRead.snapshot(spark, rootP.toString)
+    val snap = DeltaRead.snapshot(spark, rootP.toString)
     requireWritable(snap, path, removesData = false)
 
     val dirty: Seq[String] = snap.dvs.collect {
@@ -3884,50 +2879,15 @@ object DeltaWrite {
     val origDv: Map[String, String] = dirty.map(rel =>
       rel -> snap.dvs(rel).uniqueId).toMap
 
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val next = snap.version + 1
-      if (publishCommit(fs, logP, next,
-            compactContent(newFiles, dirty, snap.dvs),
-            snap.configuration, Some(snap))) {
-        autoCheckpoint(spark, rootP.toString, next, snap.configuration)
-        return next
-      }
-      require(attempt < 50, s"Delta DV purge at $path lost the version race " +
-        s"$attempt times — giving up; staged files are unreferenced")
-      snap = DeltaRead.snapshot(spark, rootP.toString)
-      val stale = dirty.exists { rel =>
-        !snap.files.contains(rel) ||
-          !snap.dvs.get(rel).map(_.uniqueId).contains(origDv(rel))
-      }
-      if (stale) {
-        newFiles.foreach(f =>
-          try fs.delete(new Path(rootP, f.relPath), false)
-          catch { case scala.util.control.NonFatal(_) => () })
+    commit(spark, path, "OPTIMIZE", snap, removesData = false) { s =>
+      if (dirty.exists(rel => !s.files.contains(rel) ||
+            !s.dvs.get(rel).map(_.uniqueId).contains(origDv(rel))))
         throw new IllegalStateException(
           s"Delta DV purge at $path aborted: a concurrent commit changed a folded " +
             "file or its deletion vector — committing the rewrite would resurrect " +
             "deleted rows. Re-run the purge against the new snapshot")
-      }
-      // appends-only competitor: retry the same rewrite at the next version
+      Commit(optimizeActions(s, dirty, newFiles), newFiles)
     }
-    -1L // unreachable
-  }
-
-  /** Re-serialize a live deletionVector descriptor into a remove
-    * action — the protocol's (path, dv.uniqueId) reconciliation needs
-    * the remove to name EXACTLY the dv identity it retires, including
-    * offset PRESENCE (delta's uniqueId distinguishes absent from 0).
-    */
-  private def putDv(rmb: com.fasterxml.jackson.databind.node.ObjectNode,
-                    d: DeletionVectors.Descriptor): Unit = {
-    val dv = rmb.putObject("deletionVector")
-    dv.put("storageType", d.storageType)
-    dv.put("pathOrInlineDv", d.pathOrInlineDv)
-    d.offset.foreach(o => dv.put("offset", o))
-    dv.put("sizeInBytes", d.sizeInBytes)
-    dv.put("cardinality", d.cardinality)
   }
 
   /** Marker domain the implicit clustered OPTIMIZE stamps with its own
@@ -3935,50 +2895,17 @@ object DeltaWrite {
     */
   private[sources] val ClusteredAtDomain = "graft.optimize.clusteredAt"
 
-  private def compactContent(adds: Seq[NewFile], removes: Seq[String],
-                             dvs: Map[String, DeletionVectors.Descriptor],
-                             clusteredAt: Option[Long] = None): String = {
-    val now = System.currentTimeMillis
-    val lines = Seq.newBuilder[String]
-    val ci = mapper.createObjectNode
-    val cib = ci.putObject("commitInfo")
-    cib.put("timestamp", now)
-    cib.put("operation", "OPTIMIZE")
-    cib.put("engineInfo", "graft-delta-writer/1.0")
-    lines += mapper.writeValueAsString(ci)
-    clusteredAt.foreach { v =>
-      val dm = mapper.createObjectNode
-      val dmb = dm.putObject("domainMetadata")
-      dmb.put("domain", ClusteredAtDomain)
-      dmb.put("configuration", s"""{"version":$v}""")
-      dmb.put("removed", false)
-      lines += mapper.writeValueAsString(dm)
-    }
-    removes.foreach { p =>
-      val rm = mapper.createObjectNode
-      val rmb = rm.putObject("remove")
-      rmb.put("path", encodePath(p))
-      rmb.put("deletionTimestamp", now)
-      rmb.put("dataChange", false)
-      dvs.get(p).foreach(putDv(rmb, _))
-      lines += mapper.writeValueAsString(rm)
-    }
-    adds.foreach { f =>
-      val ad = mapper.createObjectNode
-      val adb = ad.putObject("add")
-      adb.put("path", encodePath(f.relPath))
-      val pv = adb.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      adb.put("size", f.size)
-      adb.put("modificationTime", f.modificationTime)
-      adb.put("dataChange", false)
-      if (f.stats != null) adb.put("stats", f.stats)
-      lines += mapper.writeValueAsString(ad)
-    }
-    lines.result().mkString("\n") + "\n"
-  }
+  /** OPTIMIZE's actions (compact, purgeDvs): a dataChange=false swap of
+    * `removes` (with their DVs) for `adds`, plus the clustering marker.
+    */
+  private def optimizeActions(snap: DeltaRead.Snapshot, removes: Seq[String],
+                              adds: Seq[NewFile],
+                              clusteredAt: Option[Long] = None): Seq[Action] =
+    Seq(CommitInfo("OPTIMIZE")) ++
+      clusteredAt.map(v => DomainMetadata(ClusteredAtDomain, s"""{"version":$v}""",
+        removed = false)) ++
+      removes.map(rel => Remove(rel, dataChange = false, snap.dvs.get(rel))) ++
+      adds.map(addOf(_, dataChange = false))
 
   /** Physically delete files no longer referenced by the CURRENT
     * snapshot and older than `retentionMs` (mtime-based, delta-spark's
@@ -4817,7 +3744,11 @@ object DeltaWrite {
     */
   val CkPartActions: Long = 50000L
 
-  private def qualifiedRoot(spark: SparkSession, path: String): Path = {
+  /** The newest snapshot of the table at `path`. */
+  private def latestSnapshot(spark: SparkSession, path: String): DeltaRead.Snapshot =
+    DeltaRead.snapshot(spark, qualifiedRoot(spark, path).toString)
+
+  private[sources] def qualifiedRoot(spark: SparkSession, path: String): Path = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
   }

@@ -3106,4 +3106,62 @@ class DeltaWriteSuite extends SparkSpec {
     assert(got.keySet == (0L until 10L).filter(_ % 2 == 1).toSet)
     assert(got(7L) == "x1")
   }
+
+  test("a write that loses the commit race re-runs the writer gate on the winner's snapshot") {
+    val root = tmp()
+    DeltaWrite.append(spark, Seq((1L, "a")).toDF("id", "v").coalesce(1), root)     // v0
+    // the overwrite reads v0 and passes the gate; its data job then
+    // plans its input on the driver, which lands a competing
+    // delta.appendOnly=true commit as v1 — the overwrite's CAS at v1
+    // loses, and the retry must refuse on the winner's snapshot
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val rows = new PlanHookRDD(spark.sparkContext, Seq(org.apache.spark.sql.Row(9L, "z")),
+      () => DeltaWrite.setProperties(spark, root, Map("delta.appendOnly" -> "true")))
+    val df = spark.createDataFrame(rows,
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))))
+    val e = intercept[UnsupportedOperationException] {
+      DeltaWrite.overwrite(spark, df, root)
+    }
+    assert(e.getMessage.contains("delta.appendOnly=true"), e.getMessage)
+    assert(DeltaRead.snapshot(spark, root).version == 1L)
+    assert(DeltaRead.read(spark, root).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    // the refused overwrite's staged file is reclaimed, not left behind
+    val data = new java.io.File(root.stripPrefix("file:")).list().filter(_.endsWith(".parquet"))
+    assert(data.length == 1, data.toSeq)
+  }
+
+  test("every commit honors delta.checkpointInterval — a DELETE landing on it folds") {
+    val root = tmp()
+    DeltaWrite.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), root) // v0
+    DeltaWrite.setProperties(spark, root, Map("delta.checkpointInterval" -> "2"))           // v1
+    assert(DeltaWrite.delete(spark, root, "id = 1") == 2L)                                 // v2
+    val ptr = new java.io.File(root.stripPrefix("file:"), "_delta_log/_last_checkpoint")
+    assert(ptr.exists, "the DELETE at the interval must write a checkpoint")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new String(java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8"))
+    assert(node.get("version").asLong == 2L)
+    assert(DeltaRead.read(spark, root).as[(Long, String)].collect().toSeq == Seq((2L, "b")))
+  }
+}
+
+/** An RDD whose driver-side planning (the first `partitions` call,
+  * made when a job over it is submitted) runs `onPlan` once — a way to
+  * land a competing commit between an operation's snapshot read and
+  * its commit using the public API only.
+  */
+private class PlanHookRDD(sc: org.apache.spark.SparkContext,
+                          rows: Seq[org.apache.spark.sql.Row],
+                          @transient onPlan: () => Unit)
+    extends org.apache.spark.rdd.RDD[org.apache.spark.sql.Row](sc, Nil) {
+  override protected def getPartitions: Array[org.apache.spark.Partition] = {
+    onPlan()
+    Array(PlanHookRDD.OnlyPartition)
+  }
+  override def compute(p: org.apache.spark.Partition,
+                       ctx: org.apache.spark.TaskContext): Iterator[org.apache.spark.sql.Row] =
+    rows.iterator
+}
+
+private object PlanHookRDD {
+  object OnlyPartition extends org.apache.spark.Partition { override def index: Int = 0 }
 }
