@@ -24,14 +24,18 @@ import graft.pipeline.VersionedTable
   * were admitted by batch N" to downstream consumers.
   *
   * Concurrency: ingest batches running in parallel serialize through
-  * the manifest's pointer CAS, and the DEDUP INVARIANT survives the
-  * race — a commit is attempted against the exact store version the
-  * batch was deduped against (`expectedVersion`); when another batch
-  * won, the loser re-checks its survivors against ONLY the rows the
-  * winner admitted ([[VersionedTable.changesBetween]] — O(conflict
-  * delta), signatures only, no text), drops fresh matches, and retries.
-  * Two racing batches carrying copies of the same new document
-  * therefore admit exactly one copy, whichever order they land in.
+  * the manifest's one commit loop
+  * ([[graft.pipeline.VersionedTable.commitDerivedDelta]]), and the
+  * DEDUP INVARIANT survives the race — every commit attempt derives its
+  * rows from that attempt's store snapshot: when another batch landed
+  * since the version the batch was deduped against, the batch re-checks
+  * its survivors against ONLY the rows the winner admitted
+  * ([[VersionedTable.changesBetween]] — O(conflict delta), signatures
+  * only, no text), drops fresh matches, and publishes as exactly the
+  * next version (a lost publish race repeats this, up to the loop's
+  * 20-attempt cap). Two racing batches carrying copies of the same new
+  * document therefore admit exactly one copy, whichever order they land
+  * in.
   *
   * Reference analog: drune dedups only within one materialization
   * (steps/writer.py merge modes); a persistent cross-batch signature
@@ -68,13 +72,6 @@ object IncrementalDedup {
   final case class SigParams(numHashes: Int = 128, shingleK: Int = 5, seed: Long = 42L)
 
   private val ParamsFile = "_sig_params"
-
-  /** Conflict-retry cap for the optimistic commit loop. Every retry
-    * means another writer made progress (the version strictly
-    * advances), so hitting this indicates pathological contention, not
-    * livelock.
-    */
-  private val MaxCommitAttempts = 10
 
   private def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -200,14 +197,20 @@ object IncrementalDedup {
     *     pairs the fetch switches to a shuffled join).
     *  7. Survivors = delta minus dropped (any corpus match, or a
     *     lower-id delta match); their signatures append to the store
-    *     as ONE O(delta) versioned commit, attempted against the
-    *     EXACT base version of step 3 — on a concurrency conflict the
-    *     survivors re-check against just the winner's admitted rows
-    *     and the commit retries (class doc, "Concurrency").
+    *     as ONE O(delta) versioned commit of exactly the next version
+    *     after the base of step 3 — when another batch landed first,
+    *     the survivors re-check against just the winner's admitted
+    *     rows before the commit (class doc, "Concurrency").
     *
     * Equivalence (ScalaTested): with a common `maxBucket`, the pair
     * set equals `Dedup.minhashLsh(corpus ∪ delta)` restricted to
     * pairs with at least one delta side.
+    *
+    * With `append = false` the survivors are returned LAZY (no
+    * checkpoint job): they re-evaluate `delta` on every action, so the
+    * `delta` frame must be deterministic — a non-deterministic frame
+    * (an unordered `limit`, a `sample`) would make `survivors` disagree
+    * with the signatures and pairs they were derived from.
     */
   def dedupeDelta(
       spark: SparkSession,
@@ -229,18 +232,16 @@ object IncrementalDedup {
     * — the q93/q85 all-pairs trick applied to the incremental path),
     * and `verify` replaces the MinHash signature-agreement check with
     * an exact verifier (pairsRaw in: `id_a, id_b, delta_id, src`;
-    * verified out: same plus `est_jaccard`). The surrounding
-    * machinery — store init, snapshot pinning, the broadcast
-    * collision join, bounded bucket collects, pair generation and the
-    * survivor anti-join — is the PRODUCTION code path, which is the
-    * point: it runs under a driver hash for the first time.
-    */
-  /** `verify` returns the lazy verified frame plus any temp frames it
-    * persisted — released by the CALLER after materializing the result
-    * (r19: the seam used to route through [[Dedup.jaccardVerify]],
-    * which re-persisted the already-persisted pair set and spent an
-    * extra checkpoint round materializing a frame the caller was about
-    * to checkpoint again).
+    * verified out: same plus `est_jaccard`). `verify` returns the lazy
+    * verified frame plus any temp frames it persisted — released by the
+    * CALLER after materializing the result (r19: the seam used to route
+    * through [[Dedup.jaccardVerify]], which re-persisted the
+    * already-persisted pair set and spent an extra checkpoint round
+    * materializing a frame the caller was about to checkpoint again).
+    * The surrounding machinery — store init, snapshot pinning, the
+    * broadcast collision join, bounded bucket collects, pair generation
+    * and the survivor anti-join — is the PRODUCTION code path, which is
+    * the point: it runs under an oracle hash for the first time.
     */
   private[graft] final case class ExactSeam(
       constantBand: Boolean,
@@ -341,59 +342,43 @@ object IncrementalDedup {
     var pairFrames = List(
       verifiedMat.select(col("id_a"), col("id_b"), col("est_jaccard"), col("src")))
 
+    def survivorSigs = deltaSigs.join(
+      survivors.select(col(idCol).as("__keep")), deltaSigs("id") === col("__keep"), "left_semi")
+
     beforeCommit()
 
     var curVersion = baseVersion
-    var version = -1L
-    if (append) {
-      var attempts = 0
-      var committed = false
-      while (!committed) {
-        attempts += 1
-        if (survivors.isEmpty) {
-          // no-op ingest: minting an empty version would churn
-          // changesSince consumers and march the dir count toward a
-          // pointless full-store compaction
-          version = curVersion
-          committed = true
-        } else {
-          val survivorSigs = deltaSigs.join(
-            survivors.select(col(idCol).as("__keep")),
-            deltaSigs("id") === col("__keep"), "left_semi")
-          try {
-            version = VersionedTable.commitDelta(spark, root, "parquet", survivorSigs,
-              expectedVersion = Some(curVersion))
-            committed = true
-          } catch {
-            case c: VersionedTable.VersionConflictException =>
-              if (attempts >= MaxCommitAttempts) throw new IllegalStateException(
-                s"incremental dedup at $root lost the commit race $attempts times — " +
-                  "writer contention is pathological; retry with backoff", c)
-              // Re-check survivors against ONLY the span the winner(s)
-              // admitted: signatures on both sides, no text, O(conflict
-              // delta). Internal pairs were already emitted — cross only.
-              val newSigs = VersionedTable.changesBetween(spark, root, curVersion, c.actual)
-                .select(col("id"), col("sig"))
-              val survivorSide = deltaSigs.join(
-                survivors.select(col(idCol).as("__keep")),
-                deltaSigs("id") === col("__keep"), "left_semi")
-              val (vp, praw, nP, ts) = verifiedDeltaPairs(
-                survivorSide, newSigs, p.numHashes, bands, rows, threshold,
-                maxBucket, maxBroadcastPairs, includeInternal = false, seam)
-              val newVerified = Dedup.materializeAndRelease(vp, (praw +: ts): _*)
-              val newDropped = newVerified.select(col("delta_id").as("__drop")).distinct()
-              val newDroppedK =
-                if (nP <= maxBroadcastPairs) broadcast(newDropped) else newDropped
-              survivors = Dedup.materializeAndRelease(
-                survivors.join(newDroppedK,
-                  survivors(idCol) === newDropped("__drop"), "left_anti"))
-              pairFrames :+= newVerified.select(
-                col("id_a"), col("id_b"), col("est_jaccard"), col("src"))
-              curVersion = c.actual
-          }
+    val version =
+      if (!append) -1L
+      else VersionedTable.commitDerivedDelta(spark, root, "parquet") { snap =>
+        val head = snap.getOrElse(throw new IllegalStateException(
+          s"signature store at $root has no committed version")).version
+        if (head != curVersion) {
+          // Another batch landed: re-check survivors against ONLY the
+          // span the winner(s) admitted — signatures on both sides, no
+          // text, O(conflict delta). Internal pairs were already
+          // emitted — cross only.
+          val newSigs = VersionedTable.changesBetween(spark, root, curVersion, head)
+            .select(col("id"), col("sig"))
+          val (vp, praw, nP, ts) = verifiedDeltaPairs(
+            survivorSigs, newSigs, p.numHashes, bands, rows, threshold,
+            maxBucket, maxBroadcastPairs, includeInternal = false, seam)
+          val newVerified = Dedup.materializeAndRelease(vp, (praw +: ts): _*)
+          val newDropped = newVerified.select(col("delta_id").as("__drop")).distinct()
+          val newDroppedK =
+            if (nP <= maxBroadcastPairs) broadcast(newDropped) else newDropped
+          survivors = Dedup.materializeAndRelease(
+            survivors.join(newDroppedK,
+              survivors(idCol) === newDropped("__drop"), "left_anti"))
+          pairFrames :+= newVerified.select(
+            col("id_a"), col("id_b"), col("est_jaccard"), col("src"))
+          curVersion = head
         }
+        // no-op ingest: minting an empty version would churn
+        // changesSince consumers and march the dir count toward a
+        // pointless full-store compaction
+        if (survivors.isEmpty) None else Some(survivorSigs)
       }
-    }
     deltaSigs.unpersist(false)
     // the checkpoint blocks behind pairFrames back the RETURNED pairs
     // frame — they are NOT released here (same contract as minhashLsh's
@@ -542,10 +527,9 @@ object IncrementalDedup {
     * contributes a single scan of the store's thin
     * (fingerprint, keeper_id) table for the anti join — never the
     * corpus text. New fingerprints append as ONE O(delta) commit
-    * attempted against the base version (conflict → anti-join the
-    * winner's admitted fingerprints, retry — class doc,
-    * "Concurrency"), so `changesSince` answers "which documents did
-    * batch N admit".
+    * (another batch landed first → anti-join the winner's admitted
+    * fingerprints before committing — class doc, "Concurrency"), so
+    * `changesSince` answers "which documents did batch N admit".
     */
   def exactDelta(
       spark: SparkSession,
@@ -577,34 +561,22 @@ object IncrementalDedup {
 
     beforeCommit()
 
-    var version = -1L
-    if (append) {
-      var attempts = 0
-      var committed = false
-      while (!committed) {
-        attempts += 1
-        if (fresh.isEmpty) {
-          version = curVersion // no-op ingest: don't mint an empty version
-          committed = true
-        } else {
-          try {
-            version = VersionedTable.commitDelta(spark, root, "parquet", fresh,
-              expectedVersion = Some(curVersion))
-            committed = true
-          } catch {
-            case c: VersionedTable.VersionConflictException =>
-              if (attempts >= MaxCommitAttempts) throw new IllegalStateException(
-                s"incremental exact dedup at $root lost the commit race $attempts " +
-                  "times — writer contention is pathological; retry with backoff", c)
-              val winnerFps = VersionedTable.changesBetween(spark, root, curVersion, c.actual)
-                .select(col("fingerprint"))
-              fresh = Dedup.materializeAndRelease(
-                fresh.join(winnerFps, Seq("fingerprint"), "left_anti"))
-              curVersion = c.actual
-          }
+    val version =
+      if (!append) -1L
+      else VersionedTable.commitDerivedDelta(spark, root, "parquet") { snap =>
+        val head = snap.getOrElse(throw new IllegalStateException(
+          s"exact-dedup store at $root has no committed version")).version
+        if (head != curVersion) {
+          // another batch landed: drop the fingerprints it admitted
+          val winnerFps = VersionedTable.changesBetween(spark, root, curVersion, head)
+            .select(col("fingerprint"))
+          fresh = Dedup.materializeAndRelease(
+            fresh.join(winnerFps, Seq("fingerprint"), "left_anti"))
+          curVersion = head
         }
+        if (fresh.isEmpty) None // no-op ingest: don't mint an empty version
+        else Some(fresh)
       }
-    }
     ExactDelta(fresh, version)
   }
 

@@ -275,15 +275,15 @@ object MaterializedAgg {
     * rebuild instruction; a fold dir already swept by vacuum means the
     * rollup outlived the retention window — same remedy.
     *
-    * Concurrency: the watermark and the stored rollup are read from
-    * ONE pinned rollup version, and the commit carries that version as
-    * its CAS expectation — two racing refreshes serialize, the loser
-    * re-reads and retries, and the delta can never fold twice.
+    * Concurrency: each commit attempt reads the watermark and the
+    * stored rollup from that attempt's rollup snapshot and publishes
+    * the fold as exactly the next version — two racing refreshes
+    * serialize, the loser re-derives its fold from the winner's rollup,
+    * and the delta can never fold twice.
     */
   def refresh(spark: SparkSession, srcRoot: String, aggRoot: String,
               groupBy: Seq[String], aggs: Seq[MAgg],
-              srcFormat: String = "parquet", aggFormat: String = "parquet",
-              maxAttempts: Int = 5): Long = {
+              srcFormat: String = "parquet", aggFormat: String = "parquet"): Long = {
     require(groupBy.nonEmpty, "refresh needs at least one group column")
     require(aggs.nonEmpty, "refresh needs at least one aggregate")
     // A BRANCH-addressed rollup root is refused loudly: the rollup is
@@ -318,17 +318,61 @@ object MaterializedAgg {
     // that is harmless — the next refresh validates against it and
     // performs the same first full fold.
     persistDef(spark, aggRoot, d)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        return refreshOnce(spark, srcRoot, aggRoot, groupBy, aggs, srcFormat, aggFormat)
-      } catch {
-        case e: VersionedTable.VersionConflictException =>
-          if (attempt >= maxAttempts) throw e // pathological contention
+    fold(spark, srcRoot, aggRoot, aggFormat) { (aggSnap, srcHead) =>
+      aggSnap.flatMap(s => watermarkOf(spark, aggRoot, s.version, aggFormat)) match {
+        case Some(w) if w == srcHead => None // caught up — nothing to commit
+        case Some(w) =>
+          val deltaDirs = VersionedTable.appendedDirsBetween(spark, srcRoot, w, srcHead)
+            .getOrElse(throw new IllegalArgumentException(
+              s"source history at $srcRoot between v$w and v$srcHead contains a " +
+                "rewrite (merge/overwrite) — delta maintenance is unsound; " +
+                "rebuild the rollup from scratch (drop the agg table and refresh)"))
+          // same pre-check diffVersions performs: a fold delta dir already
+          // swept by vacuum must surface as the rebuild instruction, not a
+          // raw path-not-found out of the Spark load below. The check is
+          // check-then-act (a vacuum racing this refresh can sweep a dir
+          // between exists() and the load), so the load below ALSO maps
+          // its path-not-found to the same instruction — the friendly
+          // error is guaranteed, not best-effort.
+          def sweptError(dirs: Seq[String], cause: Throwable = null) =
+            new IllegalArgumentException(
+              s"source history at $srcRoot between v$w and v$srcHead references " +
+                s"vacuumed delta dir(s) ${dirs.mkString(", ")} — the delta span is " +
+                "no longer readable; rebuild the rollup from scratch (drop the agg " +
+                "table and refresh)", cause)
+          val swept = VersionedTable.missingDirs(spark, srcRoot, deltaDirs)
+          if (swept.nonEmpty) throw sweptError(swept)
+          val stored = VersionedTable.readVersion(spark, aggRoot, aggSnap.get.version, aggFormat)
+            .drop(SrcVersionCol)
+          val merged =
+            if (deltaDirs.isEmpty) stored // compact-only span: rows unchanged
+            else {
+              val delta =
+                try VersionedTable.loadDirs(spark, srcRoot, srcFormat, deltaDirs)
+                catch {
+                  case e: org.apache.spark.sql.AnalysisException
+                      if Option(e.getErrorClass).exists(_.contains("PATH_NOT_FOUND")) ||
+                        e.getMessage.contains("Path does not exist") =>
+                    throw sweptError(
+                      VersionedTable.missingDirs(spark, srcRoot, deltaDirs), e)
+                }
+              val partials = partial(delta, groupBy, aggs)
+              // rename the delta side wholesale (shared-lineage ambiguity
+              // — same pattern as Relational.snapshotDiff)
+              val d = partials.select(partials.columns.map(c => col(c).as(s"__d_$c")): _*)
+              val cond = groupBy.map(k => col(k) <=> col(s"__d_$k")).reduce(_ && _)
+              stored.join(d, cond, "full_outer")
+                .select(groupBy.map(k => coalesce(col(k), col(s"__d_$k")).as(k)) ++
+                  aggs.flatMap(a => storedParts(a).map { case (sc, kind) =>
+                    mergePart(kind, col(sc), col(s"__d_$sc")).as(sc)
+                  }): _*)
+            }
+          Some(merged)
+        case None =>
+          Some(partial(VersionedTable.readVersion(spark, srcRoot, srcHead, srcFormat),
+            groupBy, aggs))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** FULL REBUILD: recompute the rollup from the source's CURRENT
@@ -342,100 +386,28 @@ object MaterializedAgg {
     * Returns the source version the rollup now reflects. SQL surface:
     * `GRAFT_REFRESH('/aggRoot', FULL)`.
     */
-  def rebuild(spark: SparkSession, aggRoot: String, maxAttempts: Int = 5): Long = {
+  def rebuild(spark: SparkSession, aggRoot: String): Long = {
     val d = viewDef(spark, aggRoot).getOrElse(throw new IllegalArgumentException(
       s"no materialized-view definition at $aggRoot — nothing to rebuild; run " +
         "refresh(spark, srcRoot, aggRoot, groupBy, aggs) once to define it"))
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val srcHead = VersionedTable.currentSnapshot(spark, d.srcRoot)
+    fold(spark, d.srcRoot, aggRoot, d.aggFormat)((_, srcHead) => Some(partial(
+      VersionedTable.readVersion(spark, d.srcRoot, srcHead, d.srcFormat), d.groupBy, d.aggs)))
+  }
+
+  /** Commit the rollup `rollupOf` derives from each attempt's rollup
+    * snapshot and the source head read for it (None: already caught
+    * up), stamped with that source version. Returns the source version
+    * of the attempt that landed.
+    */
+  private def fold(spark: SparkSession, srcRoot: String, aggRoot: String, aggFormat: String)
+                  (rollupOf: (Option[VersionedTable.Snapshot], Long) => Option[DataFrame]): Long = {
+    var srcHead = -1L
+    VersionedTable.commitRewrite(spark, aggRoot, aggFormat) { aggSnap =>
+      srcHead = VersionedTable.currentSnapshot(spark, srcRoot)
         .getOrElse(throw new IllegalArgumentException(
-          s"source at ${d.srcRoot} has no committed version")).version
-      val aggSnap = VersionedTable.currentSnapshot(spark, aggRoot)
-      val full = partial(
-        VersionedTable.readVersion(spark, d.srcRoot, srcHead, d.srcFormat),
-        d.groupBy, d.aggs)
-      try return commit(spark, aggRoot, full, srcHead, d.aggFormat, aggSnap.map(_.version))
-      catch {
-        case e: VersionedTable.VersionConflictException =>
-          if (attempt >= maxAttempts) throw e // pathological contention
-      }
+          s"source at $srcRoot has no committed version")).version
+      rollupOf(aggSnap, srcHead).map(_.withColumn(SrcVersionCol, lit(srcHead)))
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def refreshOnce(spark: SparkSession, srcRoot: String, aggRoot: String,
-                          groupBy: Seq[String], aggs: Seq[MAgg],
-                          srcFormat: String, aggFormat: String): Long = {
-    val srcHead = VersionedTable.currentSnapshot(spark, srcRoot)
-      .getOrElse(throw new IllegalArgumentException(
-        s"source at $srcRoot has no committed version")).version
-    // Pin ONE rollup version: watermark and stored contents must come
-    // from the same snapshot, and the commit below expects exactly it.
-    val aggSnap = VersionedTable.currentSnapshot(spark, aggRoot)
-    aggSnap.flatMap(s => watermarkOf(spark, aggRoot, s.version, aggFormat)) match {
-      case Some(w) if w == srcHead => w // caught up — nothing to commit
-      case Some(w) =>
-        val deltaDirs = VersionedTable.appendedDirsBetween(spark, srcRoot, w, srcHead)
-          .getOrElse(throw new IllegalArgumentException(
-            s"source history at $srcRoot between v$w and v$srcHead contains a " +
-              "rewrite (merge/overwrite) — delta maintenance is unsound; " +
-              "rebuild the rollup from scratch (drop the agg table and refresh)"))
-        // same pre-check diffVersions performs: a fold delta dir already
-        // swept by vacuum must surface as the rebuild instruction, not a
-        // raw path-not-found out of the Spark load below. The check is
-        // check-then-act (a vacuum racing this refresh can sweep a dir
-        // between exists() and the load), so the load below ALSO maps
-        // its path-not-found to the same instruction — the friendly
-        // error is guaranteed, not best-effort.
-        def sweptError(dirs: Seq[String], cause: Throwable = null) =
-          new IllegalArgumentException(
-            s"source history at $srcRoot between v$w and v$srcHead references " +
-              s"vacuumed delta dir(s) ${dirs.mkString(", ")} — the delta span is " +
-              "no longer readable; rebuild the rollup from scratch (drop the agg " +
-              "table and refresh)", cause)
-        val swept = VersionedTable.missingDirs(spark, srcRoot, deltaDirs)
-        if (swept.nonEmpty) throw sweptError(swept)
-        val stored = VersionedTable.readVersion(spark, aggRoot, aggSnap.get.version, aggFormat)
-          .drop(SrcVersionCol)
-        val merged =
-          if (deltaDirs.isEmpty) stored // compact-only span: rows unchanged
-          else {
-            val delta =
-              try VersionedTable.loadDirs(spark, srcRoot, srcFormat, deltaDirs)
-              catch {
-                case e: org.apache.spark.sql.AnalysisException
-                    if Option(e.getErrorClass).exists(_.contains("PATH_NOT_FOUND")) ||
-                      e.getMessage.contains("Path does not exist") =>
-                  throw sweptError(
-                    VersionedTable.missingDirs(spark, srcRoot, deltaDirs), e)
-              }
-            val partials = partial(delta, groupBy, aggs)
-            // rename the delta side wholesale (shared-lineage ambiguity
-            // — same pattern as Relational.snapshotDiff)
-            val d = partials.select(partials.columns.map(c => col(c).as(s"__d_$c")): _*)
-            val cond = groupBy.map(k => col(k) <=> col(s"__d_$k")).reduce(_ && _)
-            stored.join(d, cond, "full_outer")
-              .select(groupBy.map(k => coalesce(col(k), col(s"__d_$k")).as(k)) ++
-                aggs.flatMap(a => storedParts(a).map { case (sc, kind) =>
-                  mergePart(kind, col(sc), col(s"__d_$sc")).as(sc)
-                }): _*)
-          }
-        commit(spark, aggRoot, merged, srcHead, aggFormat, aggSnap.map(_.version))
-      case None =>
-        val full = partial(VersionedTable.readVersion(spark, srcRoot, srcHead, srcFormat),
-          groupBy, aggs)
-        commit(spark, aggRoot, full, srcHead, aggFormat, aggSnap.map(_.version))
-    }
-  }
-
-  private def commit(spark: SparkSession, aggRoot: String, rollup: DataFrame,
-                     srcVersion: Long, format: String,
-                     expectedAggVersion: Option[Long]): Long = {
-    VersionedTable.commit(spark, aggRoot, format,
-      _ => rollup.withColumn(SrcVersionCol, lit(srcVersion)),
-      expectedVersion = Some(expectedAggVersion.getOrElse(0L)))
-    srcVersion
+    srcHead
   }
 }

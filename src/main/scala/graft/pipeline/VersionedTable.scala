@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import ManifestTxn.{NoOp, Pointer, Publish}
+
 /** Optimistic-concurrency table commits over plain parquet — the
   * lakehouse-free answer to drune's `DeltaTable.forName(...).merge`
   * table sinks (reference: src/drune/engines/spark/steps/writer.py:
@@ -19,9 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Commit = read the current snapshot, compute the merged result as one
   * distributed plan, write it to a PRIVATE data directory, then publish
   * by atomically creating the next manifest pointer (compare-and-swap
-  * on the version number). Exactly one concurrent committer wins a
-  * version; losers delete their private directory, re-read the winner's
-  * snapshot, RE-MERGE, and retry — no lost updates, serialized history.
+  * on the version number) — every commit flavor through ONE loop
+  * ([[ManifestTxn.commit]]). Exactly one concurrent committer wins a
+  * version; losers delete the directories they derived, re-read the
+  * winner's snapshot, RE-DERIVE, and retry — no lost updates,
+  * serialized history — at most [[ManifestTxn.MaxAttempts]] (20) times.
   *
   * Because version directories are immutable, the merge plan streams
   * straight from the old files into the new directory: no
@@ -115,12 +119,12 @@ object VersionedTable {
   /** The manifest directory the root string addresses: main's, or the
     * named branch's pointer dir.
     */
-  private def mdirOf(rootP: Path, root: String): Path = branchOf(root) match {
+  private[pipeline] def mdirOf(rootP: Path, root: String): Path = branchOf(root) match {
     case Some(b) => new Path(new Path(new Path(rootP, ManifestDir), BranchesDir), b)
     case None => new Path(rootP, ManifestDir)
   }
 
-  private def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
+  private[pipeline] def fsFor(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(splitBranch(root)._1)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (fs, fs.makeQualified(p))
@@ -136,49 +140,6 @@ object VersionedTable {
       } finally in.close()
     } catch { case _: Throwable => None }
 
-  // Manifest pointers are newline-separated data-dir names, optionally
-  // followed by metadata lines starting with '#'. The one in use:
-  //   #kind=append            commitDelta's pointer-only append
-  //   #kind=fold:<deltaDir>   commitDelta's bounded auto-compaction —
-  //                           <deltaDir> is the (now unreferenced, but
-  //                           on-disk until vacuum) dir holding the
-  //                           rows this commit APPENDED
-  //   #kind=compact           maintenance compaction (no new rows)
-  //   #kind=rewrite           merge/overwrite (arbitrary row changes)
-  // Pre-marker manifests have no '#' line; kind readers treat them
-  // conservatively (append-shaped commits are still classifiable by
-  // dir-set shape, anything else is an unknown rewrite).
-  private def parseDirs(content: String): Seq[String] =
-    content.split("\n").map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
-
-  private def parseKind(content: String): Option[String] =
-    content.split("\n").map(_.trim).find(_.startsWith("#kind=")).map(_.stripPrefix("#kind="))
-
-  // `#layout=a,b` records the hive partition columns this commit's
-  // pointer was published with (`#layout=` = flat) — O(1) and
-  // rename-proof, so layout-aware maintenance (commitDelete keeping
-  // the layout through rewrites) never walks one directory branch per
-  // entry. Pre-marker pointers have no line → readers fall back to the
-  // directory walk.
-  private def layoutLine(partitionBy: Seq[String]): String = {
-    partitionBy.foreach(c => require(!c.contains(",") && !c.contains("\n"),
-      s"partition column name '$c' cannot be recorded in a layout marker"))
-    "\n#layout=" + partitionBy.mkString(",")
-  }
-
-  private def parseLayout(content: String): Option[Seq[String]] =
-    content.split("\n").map(_.trim).find(_.startsWith("#layout="))
-      .map(_.stripPrefix("#layout=").split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-
-  // `#fork=<mainVersion>` in a branch's v1 manifest records the main
-  // version the branch was cut from — publishBranch's fast-forward
-  // guard (refuse when main advanced past the fork; the audit never
-  // saw those commits). Pre-marker branches have no line → guard
-  // cannot apply (legacy last-writer-wins, documented).
-  private def parseFork(content: String): Option[Long] =
-    content.split("\n").map(_.trim).find(_.startsWith("#fork="))
-      .flatMap(l => scala.util.Try(l.stripPrefix("#fork=").toLong).toOption)
-
   /** The branch's NEWEST fork marker: v1 records the original cut and
     * every [[rebaseBranch]] commit re-records the new base, so the
     * newest marker is the main version the branch's content is
@@ -187,15 +148,18 @@ object VersionedTable {
     */
   private def latestFork(fs: FileSystem, bm: Path): Option[Long] =
     listManifests(fs, bm).sortBy(-_._1).iterator
-      .flatMap { case (_, p, _) => readSmall(fs, p).flatMap(parseFork) }
+      .flatMap { case (_, p, _) => readSmall(fs, p).flatMap(Pointer.parse(_).fork) }
       .nextOption()
+
+  /** The parsed pointer of `version` in `mdir`, if readable. */
+  private def pointerAt(fs: FileSystem, mdir: Path, version: Long): Option[Pointer] =
+    readSmall(fs, new Path(mdir, f"v$version%010d")).map(Pointer.parse)
 
   /** The recorded commit kind of `version`, if the manifest carries one. */
   private[pipeline] def commitKindOf(spark: SparkSession, root: String,
                                      version: Long): Option[String] = {
     val (fs, rootP) = fsFor(spark, root)
-    val p = new Path(mdirOf(rootP, root), f"v$version%010d")
-    if (!fs.exists(p)) None else readSmall(fs, p).flatMap(parseKind)
+    pointerAt(fs, mdirOf(rootP, root), version).flatMap(_.kind)
   }
 
   /** The committed version carrying `#tag=tag`, if any — how an
@@ -208,8 +172,7 @@ object VersionedTable {
   def taggedVersion(spark: SparkSession, root: String, tag: String): Option[Long] = {
     val (fs, rootP) = fsFor(spark, root)
     listManifests(fs, mdirOf(rootP, root)).sortBy(-_._1).iterator.flatMap { case (v, p, _) =>
-      readSmall(fs, p).flatMap(c =>
-        c.split("\n").map(_.trim).find(_ == s"#tag=$tag").map(_ => v))
+      readSmall(fs, p).filter(Pointer.parse(_).tag.contains(tag)).map(_ => v)
     }.nextOption()
   }
 
@@ -238,8 +201,16 @@ object VersionedTable {
     if (!fs.exists(p)) None
     else readSmall(fs, p).filter(_.nonEmpty)
       .orElse { Thread.sleep(50); readSmall(fs, p).filter(_.nonEmpty) }
-      .map(parseDirs)
+      .map(Pointer.parse(_).entries)
   }
+
+  /** The entries of committed `version`; a missing or unreadable one
+    * refuses loudly (`why` extends the message).
+    */
+  private def entriesAt(fs: FileSystem, rootP: Path, root: String, version: Long,
+                        why: String = ""): Seq[String] =
+    dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
+      s"versioned table at $root has no committed version $version$why"))
 
   /** Newest committed snapshot, or None for an empty/absent table.
     * An unreadable newest pointer falls back to the next-lower version
@@ -401,10 +372,7 @@ object VersionedTable {
   def readVersion(spark: SparkSession, root: String, version: Long,
                   format: String = "parquet"): DataFrame = {
     val (fs, rootP) = fsFor(spark, root)
-    val dirs = dirsOf(fs, mdirOf(rootP, root), version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"versioned table at $root has no committed version $version"))
-    load(spark, rootP, format, dirs)
+    load(spark, rootP, format, entriesAt(fs, rootP, root, version))
   }
 
   /** Incremental read: the rows of data directories that joined the
@@ -425,11 +393,9 @@ object VersionedTable {
     val (fs, rootP) = fsFor(spark, root)
     val cur = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
       s"versioned table at $root has no committed version"))
-    val oldDirs = dirsOf(fs, mdirOf(rootP, root), sinceVersion)
-      .getOrElse(throw new IllegalArgumentException(
-        s"versioned table at $root has no committed version $sinceVersion " +
-          "(never committed, or already vacuumed — incremental readers must " +
-          "keep up within the vacuum retention)")).toSet
+    val oldDirs = entriesAt(fs, rootP, root, sinceVersion,
+      " (never committed, or already vacuumed — incremental readers must " +
+        "keep up within the vacuum retention)").toSet
     val newDirs = cur.dataDirs.filterNot(oldDirs)
     // caught up: an empty frame whose schema comes from the NEWEST dir
     // only — a polling consumer hits this branch every cycle, and
@@ -446,18 +412,15 @@ object VersionedTable {
     * directories that joined the manifest after `fromVersion`, as of
     * `toVersion` — for readers that must not race commits landing while
     * they plan (e.g. an optimistic-concurrency writer re-deriving its
-    * delta after a [[VersionConflictException]] has to cover exactly
-    * the span `(from, to]` it will retry against, not whatever is
-    * newest at execution time). Both versions must still be in the
+    * delta after losing a commit race has to cover exactly the span
+    * `(from, to]` it will retry against, not whatever is newest at
+    * execution time). Both versions must still be in the
     * manifest (not vacuumed).
     */
   def changesBetween(spark: SparkSession, root: String, fromVersion: Long, toVersion: Long,
                      format: String = "parquet"): DataFrame = {
     val (fs, rootP) = fsFor(spark, root)
-    def dirs(v: Long): Seq[String] = dirsOf(fs, mdirOf(rootP, root), v)
-      .getOrElse(throw new IllegalArgumentException(
-        s"versioned table at $root has no committed version $v " +
-          "(never committed, or already vacuumed)"))
+    def dirs(v: Long) = entriesAt(fs, rootP, root, v, " (never committed, or already vacuumed)")
     val oldDirs = dirs(fromVersion).toSet
     val toDirs = dirs(toVersion)
     val newDirs = toDirs.filterNot(oldDirs)
@@ -492,10 +455,7 @@ object VersionedTable {
   private[graft] def appendedDirsBetween(spark: SparkSession, root: String,
                                             from: Long, to: Long): Option[Seq[String]] = {
     val (fs, rootP) = fsFor(spark, root)
-    def dirs(v: Long): Seq[String] = dirsOf(fs, mdirOf(rootP, root), v)
-      .getOrElse(throw new IllegalArgumentException(
-        s"versioned table at $root has no committed version $v " +
-          "(never committed, or already vacuumed)"))
+    def dirs(v: Long) = entriesAt(fs, rootP, root, v, " (never committed, or already vacuumed)")
     var prev: Option[Set[String]] = dirsOf(fs, mdirOf(rootP, root), from).map(_.toSet)
     val acc = Seq.newBuilder[String]
     var v = from + 1
@@ -579,8 +539,7 @@ object VersionedTable {
     */
   def snapshotFiles(spark: SparkSession, root: String, version: Long): Seq[String] = {
     val (fs, rootP) = fsFor(spark, root)
-    val entries = dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version $version"))
+    val entries = entriesAt(fs, rootP, root, version)
     entryFiles(spark, root, entries)
   }
 
@@ -642,8 +601,7 @@ object VersionedTable {
   def snapshotFilesPartitioned(spark: SparkSession, root: String, version: Long)
       : (Seq[LeafFile], Seq[String]) = {
     val (fs, rootP) = fsFor(spark, root)
-    val entries = dirsOf(fs, mdirOf(rootP, root), version).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version $version"))
+    val entries = entriesAt(fs, rootP, root, version)
     entryFilesPartitioned(spark, root, entries)
   }
 
@@ -905,46 +863,56 @@ object VersionedTable {
       format: String,
       merge: Option[DataFrame] => DataFrame,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
-      expectedVersion: Option[Long] = None,
       commitKind: String = "rewrite"): Long = {
-    val (fs, rootP) = fsFor(spark, root)
-    fs.mkdirs(mdirOf(rootP, root))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = currentSnapshot(spark, root)
-      // Optimistic-concurrency guard (same contract as commitDelta's):
-      // a caller whose merged result was DERIVED from a specific base
-      // version must not clobber a concurrent commit it never saw —
-      // surface the conflict before writing anything so the caller can
-      // re-derive and retry.
-      expectedVersion.foreach { exp =>
-        val cur = snap.map(_.version).getOrElse(0L)
-        if (cur != exp) throw VersionConflictException(root, exp, cur)
-      }
-      val next = snap.map(_.version + 1).getOrElse(1L)
-      val base = snap.map(s => load(spark, rootP, format, s.dataDirs))
-      val dirName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
-      val dataDir = new Path(rootP, dirName)
-      val w = merge(base).write.format(format)
-        .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .save(dataDir.toString)
-      FileStats.writeSidecar(spark, fs, dataDir, format)
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          dirName + s"\n#kind=$commitKind" + layoutLine(partitionBy))) {
-        recordFormat(fs, rootP, format) // only a PUBLISHED format is recorded
-        return next
-      }
-      // lost the race: discard the private directory (vacuum would also
-      // sweep it) and re-merge against the winner's snapshot
-      fs.delete(dataDir, true)
-    }
-    throw new IllegalStateException(
-      s"versioned commit at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
+    val (_, rootP) = fsFor(spark, root)
+    commitRewrite(spark, root, format, partitionBy, commitKind)(snap =>
+      Some(merge(snap.map(s => load(spark, rootP, format, s.dataDirs)))))
   }
+
+  /** [[commit]] for callers that re-derive their result from each
+    * attempt's snapshot: `derive` returns the rows of the next version,
+    * or None to commit nothing (the result is then the snapshot's
+    * version, 0 for an empty table).
+    */
+  private[graft] def commitRewrite(spark: SparkSession, root: String, format: String,
+                                   partitionBy: Seq[String] = Nil, kind: String = "rewrite")
+                                  (derive: Option[Snapshot] => Option[DataFrame]): Long = {
+    val (fs, rootP) = fsFor(spark, root)
+    ManifestTxn.commit(spark, root, "versioned commit", Some(format)) { snap =>
+      derive(snap) match {
+        case Some(rows) => rewrite(spark, fs, rootP, format, snap, rows, partitionBy, kind)
+        case None => NoOp(snap.map(_.version).getOrElse(0L))
+      }
+    }
+  }
+
+  /** A fresh data dir name for version `next`. */
+  private def newDirName(next: Long): String =
+    f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
+
+  /** Write `rows` into the new data dir `dirName` (hive-partitioned by
+    * `partitionBy`) plus its stats sidecar.
+    */
+  private def writeDir(spark: SparkSession, fs: FileSystem, rootP: Path, format: String,
+                       rows: DataFrame, partitionBy: Seq[String], dirName: String): Unit = {
+    val dataDir = new Path(rootP, dirName)
+    val w = rows.write.format(format).mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(dataDir.toString)
+    FileStats.writeSidecar(spark, fs, dataDir, format)
+  }
+
+  /** The full-rewrite body: `rows` land in ONE new data dir, which the
+    * next version's pointer names alone.
+    */
+  private def rewrite(spark: SparkSession, fs: FileSystem, rootP: Path, format: String,
+                      snap: Option[Snapshot], rows: DataFrame, partitionBy: Seq[String],
+                      kind: String, tag: Option[String] = None): Publish = {
+    val dirName = newDirName(snap.map(_.version + 1).getOrElse(1L))
+    writeDir(spark, fs, rootP, format, rows, partitionBy, dirName)
+    Publish(Pointer(Seq(dirName), Some(kind), Some(partitionBy), tag = tag), Seq(dirName))
+  }
+
+  private val DefaultCompactAfter = 16
 
   /** Append-only commit: write ONLY the delta rows to a private
     * directory and publish a pointer listing the base's directories
@@ -963,88 +931,61 @@ object VersionedTable {
       format: String,
       delta: DataFrame,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
-      compactAfter: Int = 16,
-      expectedVersion: Option[Long] = None,
+      compactAfter: Int = DefaultCompactAfter,
       tag: Option[String] = None): Long = {
     tag.foreach(t => require(!t.contains("\n") && t.trim.nonEmpty,
       s"commit tag must be a non-empty single line, got '$t'"))
     require(compactAfter >= 1, "compactAfter must be >= 1")
     val (fs, rootP) = fsFor(spark, root)
-    fs.mkdirs(mdirOf(rootP, root))
-    // Optimistic-concurrency early exit: when the caller's delta was
-    // DERIVED from a specific base version (e.g. IncrementalDedup's
-    // survivors are "new relative to version N"), a moved table means
-    // the delta itself may be stale — don't even write it; the caller
-    // re-derives against the winner and retries.
-    expectedVersion.foreach { exp =>
-      val cur = currentSnapshot(spark, root).map(_.version).getOrElse(0L)
-      if (cur != exp) throw VersionConflictException(root, exp, cur)
-    }
     val deltaName = "data-delta-" + java.util.UUID.randomUUID.toString.take(8)
-    val wd = delta.write.format(format).mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-    (if (partitionBy.nonEmpty) wd.partitionBy(partitionBy: _*) else wd)
-      .save(new Path(rootP, deltaName).toString)
-    FileStats.writeSidecar(spark, fs, new Path(rootP, deltaName), format)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = currentSnapshot(spark, root)
-      // expectedVersion re-check inside the loop: a writer that lands
-      // between the early exit above and this read makes our delta
-      // stale — discard the written dir and surface the conflict (the
-      // CAS alone would silently append a delta derived from the wrong
-      // base)
-      expectedVersion.foreach { exp =>
-        val cur = snap.map(_.version).getOrElse(0L)
-        if (cur != exp) {
-          fs.delete(new Path(rootP, deltaName), true)
-          throw VersionConflictException(root, exp, cur)
-        }
-      }
-      val next = snap.map(_.version + 1).getOrElse(1L)
-      val baseDirs = snap.map(_.dataDirs).getOrElse(Nil)
-      val manifest = new Path(mdirOf(rootP, root), f"v$next%010d")
-      val tagLine = tag.map(t => s"\n#tag=$t").getOrElse("")
-      if (baseDirs.length + 1 <= compactAfter) {
-        if (casPublish(fs, manifest,
-            ((baseDirs :+ deltaName) :+ "#kind=append").mkString("\n") +
-              layoutLine(partitionBy) + tagLine)) {
-          recordFormat(fs, rootP, format)
-          return next
-        }
-        // pointer-only race loss: the delta directory is still private
-        // and valid — just recompute the dir list against the winner
-      } else {
-        val compactName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
-        val all = load(spark, rootP, format, baseDirs :+ deltaName)
-        val wc = all.write.format(format).mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-        (if (partitionBy.nonEmpty) wc.partitionBy(partitionBy: _*) else wc)
-          .save(new Path(rootP, compactName).toString)
-        FileStats.writeSidecar(spark, fs, new Path(rootP, compactName), format)
-        // fold: this commit both APPENDS the delta dir's rows and
-        // repackages the whole table — record WHICH dir carries the
-        // new rows so delta-maintenance readers (MaterializedAgg,
-        // diffVersions) survive the bounded auto-compaction instead of
-        // treating it as an opaque rewrite
-        if (casPublish(fs, manifest,
-            compactName + s"\n#kind=fold:$deltaName" + layoutLine(partitionBy) + tagLine)) {
-          // the delta's rows now live in the compacted dir; the delta
-          // dir is unreferenced and left for vacuum's grace period to
-          // sweep — deleting it HERE would yank the freshest rows out
-          // from under a readStream consumer mid-listing (streams read
-          // delta dirs, never compacted dirs; the vacuum grace is their
-          // retention window)
-          recordFormat(fs, rootP, format)
-          return next
-        }
-        fs.delete(new Path(rootP, compactName), true)
+    writeDir(spark, fs, rootP, format, delta, partitionBy, deltaName)
+    ManifestTxn.commit(spark, root, "versioned append", Some(format), kept = Seq(deltaName))(
+      appendStep(spark, fs, rootP, format, _, deltaName, partitionBy, compactAfter, tag))
+  }
+
+  /** [[commitDelta]] for callers that re-derive their delta from each
+    * attempt's snapshot (e.g. IncrementalDedup re-checking its
+    * survivors against the rows a racing writer admitted): `derive`
+    * returns the delta rows, or None to commit nothing (the result is
+    * then the snapshot's version). The delta dir is written per
+    * attempt and deleted when the attempt loses the race.
+    */
+  private[graft] def commitDerivedDelta(spark: SparkSession, root: String, format: String)
+                                       (derive: Option[Snapshot] => Option[DataFrame]): Long = {
+    val (fs, rootP) = fsFor(spark, root)
+    ManifestTxn.commit(spark, root, "versioned append", Some(format)) { snap =>
+      derive(snap) match {
+        case Some(delta) =>
+          val deltaName = "data-delta-" + java.util.UUID.randomUUID.toString.take(8)
+          writeDir(spark, fs, rootP, format, delta, Nil, deltaName)
+          val step = appendStep(spark, fs, rootP, format, snap, deltaName, Nil,
+            DefaultCompactAfter, None)
+          step.copy(staged = deltaName +: step.staged)
+        case None => NoOp(snap.map(_.version).getOrElse(0L))
       }
     }
-    fs.delete(new Path(rootP, deltaName), true)
-    throw new IllegalStateException(
-      s"versioned append at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
+  }
+
+  /** The append body over `snap`: the base's entries plus `deltaName`,
+    * or — past `compactAfter` entries — a fold of both into one new dir.
+    */
+  private def appendStep(spark: SparkSession, fs: FileSystem, rootP: Path, format: String,
+                         snap: Option[Snapshot], deltaName: String, partitionBy: Seq[String],
+                         compactAfter: Int, tag: Option[String]): Publish = {
+    val baseDirs = snap.map(_.dataDirs).getOrElse(Nil)
+    if (baseDirs.length + 1 <= compactAfter)
+      Publish(Pointer(baseDirs :+ deltaName, Some("append"), Some(partitionBy), tag = tag))
+    else
+      // fold: this commit both APPENDS the delta dir's rows and
+      // repackages the whole table — the kind records WHICH dir carries
+      // the new rows, so delta-maintenance readers (MaterializedAgg,
+      // diffVersions) survive the bounded auto-compaction instead of
+      // treating it as an opaque rewrite. The delta dir stays on disk
+      // for vacuum's grace period to sweep: deleting it here would yank
+      // the freshest rows out from under a readStream consumer
+      // mid-listing (streams read delta dirs, never compacted dirs).
+      rewrite(spark, fs, rootP, format, snap, load(spark, rootP, format, baseDirs :+ deltaName),
+        partitionBy, s"fold:$deltaName", tag)
   }
 
   /** FILE-PRUNED keyed merge — the commit that keeps MERGE O(touched
@@ -1077,8 +1018,7 @@ object VersionedTable {
     * partition subtrees ([[classifyEntriesBy]]): sidecar relative
     * paths keep the `col=value/` segments, so untouched files carry
     * over as partition-qualified file refs and only intersecting
-    * leaves rewrite. Only layouts with no usable sidecar fall back to
-    * the full rewrite.
+    * leaves rewrite. Files without a usable sidecar rewrite.
     *
     * The commit publishes `#kind=merge`: delta-maintenance readers
     * (streams, matviews, diffVersions' fast path) correctly treat the
@@ -1092,7 +1032,6 @@ object VersionedTable {
       keys: Seq[String],
       merge: (DataFrame, DataFrame) => DataFrame = null,
       partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 5,
       maxCollectedKeys: Int = 4000000): Long = {
     require(keys.nonEmpty, "commitMerge needs at least one key column")
     val mergeFn: (DataFrame, DataFrame) => DataFrame =
@@ -1102,7 +1041,6 @@ object VersionedTable {
           keys, "left_anti"),
         allowMissingColumns = true)
     val (fs, rootP) = fsFor(spark, root)
-    fs.mkdirs(mdirOf(rootP, root))
 
     // The source key set is collected ONCE (it prices the pruning for
     // every attempt); the per-file classification reruns per attempt
@@ -1122,55 +1060,33 @@ object VersionedTable {
         st => FileStats.rangeOverlaps(st, lo, hi)
       }
 
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = currentSnapshot(spark, root)
-      snap match {
-        case None =>
-          // empty table: the merge IS the source — a plain first commit
-          return commit(spark, root, format, _ => source,
-            partitionBy = partitionBy, commitKind = "merge")
-        case Some(s) =>
-          classifyEntries(spark, fs, rootP, s.dataDirs, keyCol, pruner) match {
-            case None =>
-              // hive layout (or a non-parquet table): no file-level
-              // carry-over — full rewrite preserves semantics
-              return commit(spark, root, format,
-                base => mergeFn(base.getOrElse(source.limit(0)), source),
-                partitionBy = partitionBy, commitKind = "merge")
-            case Some((untouchedEntries, touchedFiles)) =>
-              val next = s.version + 1
-              val dirName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
-              val dataDir = new Path(rootP, dirName)
-              val touchedBase =
-                if (touchedFiles.nonEmpty)
-                  load(spark, rootP, format, touchedFiles)
-                else load(spark, rootP, format, Seq(s.dataDirs.last)).limit(0)
-              val wm = mergeFn(touchedBase, source).write.format(format)
-                .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-              // keep the hive layout through partial rewrites too —
-              // a flat replacement dir on a partitioned table is
-              // correct (partition cols become data cols) but degrades
-              // later partition-level operations
-              (if (partitionBy.nonEmpty) wm.partitionBy(partitionBy: _*) else wm)
-                .save(dataDir.toString)
-              FileStats.writeSidecar(spark, fs, dataDir, format)
-              val pointer = ((untouchedEntries :+ dirName) :+ "#kind=merge") :+
-                layoutLine(partitionBy).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-              fs.delete(dataDir, true) // lost the race: re-derive
-          }
-      }
+    ManifestTxn.commit(spark, root, "versioned merge", Some(format)) {
+      case None =>
+        // empty table: the merge IS the source — a plain first commit
+        rewrite(spark, fs, rootP, format, None, source, partitionBy, "merge")
+      case Some(s) =>
+        // no usable stats on a file: conservatively rewrite it
+        val (untouchedEntries, touchedFiles) = classifyEntriesBy(fs, rootP, s.dataDirs,
+          _.flatMap(_.cols.get(keyCol)).forall(pruner))
+        val dirName = newDirName(s.version + 1)
+        // keep the hive layout through partial rewrites too — a flat
+        // replacement dir on a partitioned table is correct (partition
+        // cols become data cols) but degrades later partition-level
+        // operations
+        writeDir(spark, fs, rootP, format,
+          mergeFn(touchedRows(spark, rootP, format, s, touchedFiles), source), partitionBy, dirName)
+        Publish(Pointer(untouchedEntries :+ dirName, Some("merge"), Some(partitionBy)),
+          Seq(dirName))
     }
-    throw new IllegalStateException(
-      s"versioned merge at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff or shard the table")
   }
+
+  /** The rows of a pruned rewrite's touched files — an empty frame with
+    * the snapshot's schema when nothing is touched.
+    */
+  private def touchedRows(spark: SparkSession, rootP: Path, format: String, s: Snapshot,
+                          touchedFiles: Seq[String]): DataFrame =
+    if (touchedFiles.nonEmpty) load(spark, rootP, format, touchedFiles)
+    else load(spark, rootP, format, Seq(s.dataDirs.last)).limit(0)
 
   /** PARTITION-PRUNED dynamic partition overwrite — the commit that
     * keeps `overwrite_partition` O(touched partitions) instead of
@@ -1206,11 +1122,9 @@ object VersionedTable {
       root: String,
       format: String,
       source: DataFrame,
-      partitionBy: Seq[String],
-      maxAttempts: Int = 5): Long = {
+      partitionBy: Seq[String]): Long = {
     require(partitionBy.nonEmpty, "commitPartitionOverwrite needs partition columns")
     val (fs, rootP) = fsFor(spark, root)
-    fs.mkdirs(mdirOf(rootP, root))
     import org.apache.spark.sql.functions.col
     // Write the source FIRST into a private partitioned dir, then
     // derive the touched set from the leaves ACTUALLY written — the
@@ -1220,11 +1134,12 @@ object VersionedTable {
     // old and new rows visible together). The dir name is claimed
     // pre-CAS like commitDelta's delta dirs; a CAS race loss reuses it
     // unchanged (pointer-only retry).
+    // The per-file min/max sidecar lets later stats-pruned
+    // merges/deletes and read-side data skipping classify this dir at
+    // leaf-file level, like every other commit's dirs.
     val dirName = "data-po-" + java.util.UUID.randomUUID.toString.take(8)
     val dataDir = new Path(rootP, dirName)
-    source.write.format(format).partitionBy(partitionBy: _*)
-      .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-      .save(dataDir.toString)
+    writeDir(spark, fs, rootP, format, source, partitionBy, dirName)
     val touched: Set[Seq[String]] =
       partitionLeaves(fs, dataDir, partitionBy).getOrElse(throw new IllegalStateException(
         s"commitPartitionOverwrite at $root wrote $dirName but its layout does not " +
@@ -1245,57 +1160,27 @@ object VersionedTable {
       // no data files, and a v1 pointing at an empty dir would fail
       // schema inference on every later read.
       fs.delete(dataDir, true)
-      return currentSnapshot(spark, root).map(_.version).getOrElse(
-        commit(spark, root, format, _ => source, commitKind = "merge"))
+      return commitRewrite(spark, root, format, kind = "merge")(snap =>
+        if (snap.isDefined) None else Some(source))
     }
-    // per-file min/max sidecar so later stats-pruned merges/deletes and
-    // read-side data skipping classify this dir at leaf-file level —
-    // every other commit path writes one (commit/commitDelta/compact/
-    // commitMerge/commitOverwriteWhere)
-    FileStats.writeSidecar(spark, fs, dataDir, format)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      currentSnapshot(spark, root) match {
-        case None =>
-          // empty table: the written dir IS the first version
-          val pointer = (Seq(dirName) :+ "#kind=merge") :+
-            layoutLine(partitionBy).stripPrefix("\n")
-          if (casPublish(fs, new Path(mdirOf(rootP, root), "v0000000001"),
-              pointer.mkString("\n"))) {
-            recordFormat(fs, rootP, format)
-            return 1L
-          }
-        case Some(s) =>
-          classifyPartitionEntries(fs, rootP, s.dataDirs, partitionBy, touched) match {
-            case None =>
-              // not partition-classifiable: sound full-rewrite fallback
-              fs.delete(dataDir, true)
-              return commit(spark, root, format, {
-                case None => source
-                case Some(b) =>
-                  val parts = source.select(partitionBy.map(col): _*).distinct()
-                  b.join(parts, partitionBy, "left_anti")
-                    .unionByName(source, allowMissingColumns = true)
-              }, partitionBy = partitionBy, commitKind = "merge")
-            case Some(carried) =>
-              val next = s.version + 1
-              val pointer = ((carried :+ dirName) :+ "#kind=merge") :+
-                layoutLine(partitionBy).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-            // pointer-only race loss: the written dir is still private
-            // and valid — re-classify against the winner's snapshot
-          }
-      }
+    ManifestTxn.commit(spark, root, "versioned partition overwrite", Some(format),
+        kept = Seq(dirName)) {
+      // empty table: the written dir IS the first version
+      case None => Publish(Pointer(Seq(dirName), Some("merge"), Some(partitionBy)))
+      case snap @ Some(s) =>
+        classifyPartitionEntries(fs, rootP, s.dataDirs, partitionBy, touched) match {
+          case None =>
+            // not partition-classifiable: sound full-rewrite fallback
+            // (the unused written dir is deleted once this lands)
+            val parts = source.select(partitionBy.map(col): _*).distinct()
+            rewrite(spark, fs, rootP, format, snap,
+              load(spark, rootP, format, s.dataDirs).join(parts, partitionBy, "left_anti")
+                .unionByName(source, allowMissingColumns = true),
+              partitionBy, "merge")
+          case Some(carried) =>
+            Publish(Pointer(carried :+ dirName, Some("merge"), Some(partitionBy)))
+        }
     }
-    fs.delete(dataDir, true)
-    throw new IllegalStateException(
-      s"versioned partition overwrite at $root lost the publish race $maxAttempts " +
-        "times — writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** Split a snapshot's entries for a partition overwrite: Some(the
@@ -1402,20 +1287,22 @@ object VersionedTable {
       source: DataFrame,
       cond: String,
       transform: DataFrame => DataFrame = identity,
-      maxAttempts: Int = 5,
-      partitionBy: Seq[String] = Nil,
-      // replaceWhere guards its region by re-filtering the source with
-      // `cond`; an UPDATE's replacement rows may no longer SATISFY the
-      // condition they matched pre-update (SET touching a WHERE column)
-      // — commitUpdate passes false so they land instead of vanishing
+      partitionBy: Seq[String] = Nil): Long =
+    overwriteWhere(spark, root, format, _ => source, cond, transform, partitionBy)
+
+  /** [[commitOverwriteWhere]] over a source derived from each attempt's
+    * snapshot. replaceWhere guards its region by re-filtering the
+    * source with `cond`; an UPDATE's replacement rows may no longer
+    * SATISFY the condition they matched pre-update (SET touching a
+    * WHERE column) — commitUpdate passes `filterSource = false` so they
+    * land instead of vanishing.
+    */
+  private def overwriteWhere(
+      spark: SparkSession, root: String, format: String,
+      sourceOf: Option[Snapshot] => DataFrame, cond: String,
+      transform: DataFrame => DataFrame, partitionBy: Seq[String],
       filterSource: Boolean = true): Long = {
-    val sourceInRegion = if (filterSource) source.where(cond) else source
     val (fs, rootP) = fsFor(spark, root)
-    fs.mkdirs(mdirOf(rootP, root))
-    // hive layouts classify at LEAF-FILE level via sidecar keys (see
-    // classifyEntries); an explicit partitionBy keeps their layout
-    // through any rewrite
-    val layout = partitionBy
     val constraints = condConstraints(spark, cond)
     // a file is untouchable iff SOME implied constraint's interval is
     // provably disjoint from the file's range for that column
@@ -1453,75 +1340,42 @@ object VersionedTable {
         })
       case None => true
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      currentSnapshot(spark, root) match {
-        case None =>
-          // legacy Writer contract on an empty table: the source lands
-          // whole (no base rows to preserve, nothing to filter)
-          return commit(spark, root, format, _ => transform(source),
-            partitionBy = layout, commitKind = "merge")
-        case Some(s) =>
-          classifyEntriesBy(fs, rootP, s.dataDirs, touchesFile) match {
-            case None =>
-              return commit(spark, root, format,
-                base => transform(base.map(_.where(s"($cond) IS NOT TRUE")
-                    .unionByName(sourceInRegion, allowMissingColumns = true))
-                  .getOrElse(source)),
-                partitionBy = layout, commitKind = "merge")
-            case Some((untouchedEntries, touchedFiles)) =>
-              val next = s.version + 1
-              val dirName = f"data-$next%010d-" + java.util.UUID.randomUUID.toString.take(8)
-              val dataDir = new Path(rootP, dirName)
-              val touchedBase =
-                if (touchedFiles.nonEmpty) load(spark, rootP, format, touchedFiles)
-                else load(spark, rootP, format, Seq(s.dataDirs.last)).limit(0)
-              val wo = transform(touchedBase.where(s"($cond) IS NOT TRUE")
-                  .unionByName(sourceInRegion, allowMissingColumns = true))
-                .write.format(format)
-                .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-              // keep the hive layout through partial rewrites (see
-              // commitMerge)
-              (if (layout.nonEmpty) wo.partitionBy(layout: _*) else wo)
-                .save(dataDir.toString)
-              FileStats.writeSidecar(spark, fs, dataDir, format)
-              // a replacement in which every touched row was deleted
-              // writes NO files under a partitioned layout (dynamic
-              // writes emit nothing for zero rows) — an empty dir in
-              // the manifest would fail schema inference on read, and
-              // the exact commit is simply "the carried entries alone"
-              val replacementEmpty =
-                FileStats.listLeafDataFiles(fs, dataDir).isEmpty
-              val entriesOut =
-                if (!replacementEmpty) untouchedEntries :+ dirName
-                else if (untouchedEntries.nonEmpty) { fs.delete(dataDir, true); untouchedEntries }
-                else {
-                  // nothing carried AND nothing replaced: an empty
-                  // table — publish an empty FLAT dir (readable: the
-                  // flat writer emits a 0-row schema-bearing file)
-                  fs.delete(dataDir, true)
-                  touchedBase.where(s"($cond) IS NOT TRUE")
-                    .unionByName(sourceInRegion, allowMissingColumns = true)
-                    .limit(0).write.format(format)
-                    .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
-                    .save(dataDir.toString)
-                  Seq(dirName)
-                }
-              val pointer = (entriesOut :+ "#kind=merge") :+
-                layoutLine(layout).stripPrefix("\n")
-              if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-                  pointer.mkString("\n"))) {
-                recordFormat(fs, rootP, format)
-                return next
-              }
-              fs.delete(dataDir, true) // lost the race: re-classify
+    ManifestTxn.commit(spark, root, "versioned overwrite-where", Some(format)) {
+      case None =>
+        // legacy Writer contract on an empty table: the source lands
+        // whole (no base rows to preserve, nothing to filter)
+        rewrite(spark, fs, rootP, format, None, transform(sourceOf(None)), partitionBy, "merge")
+      case snap @ Some(s) =>
+        val sourceInRegion = if (filterSource) sourceOf(snap).where(cond) else sourceOf(snap)
+        val (untouchedEntries, touchedFiles) = classifyEntriesBy(fs, rootP, s.dataDirs, touchesFile)
+        val dirName = newDirName(s.version + 1)
+        val replacement = touchedRows(spark, rootP, format, s, touchedFiles)
+          .where(s"($cond) IS NOT TRUE").unionByName(sourceInRegion, allowMissingColumns = true)
+        // keep the hive layout through partial rewrites (see commitMerge)
+        writeDir(spark, fs, rootP, format, transform(replacement), partitionBy, dirName)
+        // a replacement in which every touched row was deleted writes NO
+        // files under a partitioned layout (dynamic writes emit nothing
+        // for zero rows) — an empty dir in the manifest would fail
+        // schema inference on read, and the exact commit is simply "the
+        // carried entries alone"
+        if (FileStats.listLeafDataFiles(fs, new Path(rootP, dirName)).nonEmpty)
+          Publish(Pointer(untouchedEntries :+ dirName, Some("merge"), Some(partitionBy)),
+            Seq(dirName))
+        else {
+          fs.delete(new Path(rootP, dirName), true)
+          if (untouchedEntries.nonEmpty)
+            Publish(Pointer(untouchedEntries, Some("merge"), Some(partitionBy)))
+          else {
+            // nothing carried AND nothing replaced: an empty table —
+            // publish an empty FLAT dir (readable: the flat writer emits
+            // a 0-row schema-bearing file)
+            replacement.limit(0).write.format(format)
+              .mode(org.apache.spark.sql.SaveMode.ErrorIfExists)
+              .save(new Path(rootP, dirName).toString)
+            Publish(Pointer(Seq(dirName), Some("merge"), Some(partitionBy)), Seq(dirName))
           }
-      }
+        }
     }
-    throw new IllegalStateException(
-      s"versioned overwrite-where at $root lost the publish race $maxAttempts " +
-        "times — writer contention is pathological; retry with backoff or shard the table")
   }
 
   /** STATS-PRUNED row-level DELETE — `commitOverwriteWhere` with an
@@ -1537,19 +1391,18 @@ object VersionedTable {
       spark: SparkSession,
       root: String,
       cond: String,
-      format: String = "",
-      maxAttempts: Int = 5): Long = {
+      format: String = ""): Long = {
     val fmt = resolveFormat(spark, root, format)
     val empty = read(spark, root, fmt).limit(0)
     // a hive-partitioned table takes the full-rewrite fallback inside
     // commitOverwriteWhere — detect its partition columns so the
     // rewrite keeps the layout instead of silently flattening it
-    commitOverwriteWhere(spark, root, fmt, empty, cond, maxAttempts = maxAttempts,
+    commitOverwriteWhere(spark, root, fmt, empty, cond,
       partitionBy = detectPartitionColumns(spark, root))
   }
 
   /** UPDATE … SET … WHERE as a stats-pruned rewrite: the replacement
-    * rows are the CURRENT snapshot's matches with `assignments`
+    * rows are the attempt's snapshot's matches with `assignments`
     * applied, and [[commitOverwriteWhere]] rewrites only the files
     * whose stats intersect the condition — O(touched), not O(table).
     * Assignments are SIMULTANEOUS (every right-hand side evaluates
@@ -1563,27 +1416,31 @@ object VersionedTable {
       root: String,
       cond: String,
       assignments: Map[String, String],
-      format: String = "",
-      maxAttempts: Int = 5): Long = {
+      format: String = ""): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val fmt = resolveFormat(spark, root, format)
-    val cur = read(spark, root, fmt)
-    assignments.keys.foreach(c => require(
-      cur.columns.exists(_.equalsIgnoreCase(c)),
-      s"UPDATE at $root: SET targets unknown column '$c' " +
-        s"(table columns: ${cur.columns.mkString(", ")})"))
     val byLower = assignments.map { case (k, v) => k.toLowerCase -> v }
     import org.apache.spark.sql.functions.{col, expr}
-    val updated = cur.where(cond).select(cur.schema.fields.map { f =>
-      byLower.get(f.name.toLowerCase)
-        .map(e => expr(e).cast(f.dataType).as(f.name))
-        .getOrElse(col(s"`${f.name}`"))
-    }.toIndexedSeq: _*)
+    // derived per attempt: a race loser must update the WINNER's
+    // matching rows, not re-land the ones it read first
+    def updatedOf(snap: Option[Snapshot]): DataFrame = {
+      val cur = readVersion(spark, root, snap.getOrElse(throw new IllegalArgumentException(
+        s"versioned table at $root has no committed version")).version, fmt)
+      assignments.keys.foreach(c => require(
+        cur.columns.exists(_.equalsIgnoreCase(c)),
+        s"UPDATE at $root: SET targets unknown column '$c' " +
+          s"(table columns: ${cur.columns.mkString(", ")})"))
+      cur.where(cond).select(cur.schema.fields.map { f =>
+        byLower.get(f.name.toLowerCase)
+          .map(e => expr(e).cast(f.dataType).as(f.name))
+          .getOrElse(col(s"`${f.name}`"))
+      }.toIndexedSeq: _*)
+    }
     // filterSource = false: the updated rows may no longer satisfy the
     // WHERE they matched (SET touching a WHERE column) — re-filtering
     // them would silently DELETE instead of update
-    commitOverwriteWhere(spark, root, fmt, updated, cond, maxAttempts = maxAttempts,
-      partitionBy = detectPartitionColumns(spark, root), filterSource = false)
+    overwriteWhere(spark, root, fmt, updatedOf, cond, identity,
+      detectPartitionColumns(spark, root), filterSource = false)
   }
 
   /** The hive partition column names of the current snapshot's layout.
@@ -1596,8 +1453,7 @@ object VersionedTable {
   private def detectPartitionColumns(spark: SparkSession, root: String): Seq[String] = {
     val (fs, rootP) = fsFor(spark, root)
     val snap = currentSnapshot(spark, root).getOrElse(return Nil)
-    val pointer = new Path(mdirOf(rootP, root), f"v${snap.version}%010d")
-    readSmall(fs, pointer).flatMap(parseLayout) match {
+    pointerAt(fs, mdirOf(rootP, root), snap.version).flatMap(_.layout) match {
       case Some(cols) => return cols
       case None => () // pre-marker pointer: walk the directories below
     }
@@ -1771,39 +1627,23 @@ object VersionedTable {
   }
 
   /** Split a snapshot's entries into (untouched entries to carry over,
-    * touched file refs to rewrite). None = the snapshot is not
-    * file-prunable (hive-partitioned dir). A dir whose every file is
-    * untouched carries over as the original DIR entry (compact,
-    * classifiable); a partially-touched dir decomposes into file refs.
-    */
-  private def classifyEntries(
-      spark: SparkSession, fs: FileSystem, rootP: Path, entries: Seq[String],
-      keyCol: String, touches: FileStats.ColStat => Boolean)
-      : Option[(Seq[String], Seq[String])] =
-    classifyEntriesBy(fs, rootP, entries, {
-      case Some(st) => st.cols.get(keyCol) match {
-        case Some(cs) => touches(cs)
-        case None => true // no usable stats: conservatively rewrite
-      }
-      case None => true
-    })
-
-  /** [[classifyEntries]] generalized to a whole-FileStat predicate —
-    * how [[commitOverwriteWhere]] consults several columns' ranges
-    * against one file.
+    * touched file refs to rewrite) by a per-file predicate over the
+    * file's stats — how [[commitMerge]] consults the key column's range
+    * and [[commitOverwriteWhere]] several columns' ranges. A dir whose
+    * every file is untouched carries over as the original DIR entry
+    * (compact, classifiable); a partially-touched dir decomposes into
+    * file refs.
     *
     * Hive-partitioned dirs and partition-subtree refs classify at the
     * LEAF-file level too: sidecars key files by dir-RELATIVE path
     * (partition subdirs ride along), the carried refs keep those
     * paths, and [[load]] restores the partition columns via basePath.
-    * Hive dirs committed BEFORE per-leaf sidecars existed have no
-    * stats — every file classifies touched (None here only for
-    * listing failures).
+    * Files without stats (dirs committed before per-leaf sidecars
+    * existed, non-parquet formats) classify touched.
     */
   private def classifyEntriesBy(
       fs: FileSystem, rootP: Path, entries: Seq[String],
-      touchesFile: Option[FileStats.FileStat] => Boolean)
-      : Option[(Seq[String], Seq[String])] = {
+      touchesFile: Option[FileStats.FileStat] => Boolean): (Seq[String], Seq[String]) = {
     val untouched = Seq.newBuilder[String]
     val touched = Seq.newBuilder[String]
     // one bounded-parallel prefetch of every distinct dir's sidecar
@@ -1815,36 +1655,24 @@ object VersionedTable {
       }.toMap
     for (entry <- entries) {
       val dir = entryDir(entry)
-      val dirP = new Path(rootP, dir)
-      val statsByFile: Map[String, FileStats.FileStat] = sidecarByDir(dir)
-      def fileTouched(rel: String): Boolean = touchesFile(statsByFile.get(rel))
-      if (isPartitionRef(entry)) {
-        // classify the subtree's leaf files against the PARENT dir's
-        // sidecar (keys are parent-relative, the ref's suffix is the
-        // key prefix)
-        val prefix = entry.substring(entry.indexOf('/') + 1)
-        val files = FileStats.listLeafDataFiles(fs, new Path(rootP, entry))
-          .map(f => s"$prefix/$f")
-        val (t, u) = files.partition(fileTouched)
-        if (t.isEmpty) untouched += entry // whole subtree survives as-is
-        else {
-          untouched ++= u.map(f => s"$dir/$f")
-          touched ++= t.map(f => s"$dir/$f")
-        }
-      } else if (isFileRef(entry)) {
-        val name = entry.substring(entry.indexOf('/') + 1)
-        if (fileTouched(name)) touched += entry else untouched += entry
+      def fileTouched(rel: String): Boolean = touchesFile(sidecarByDir(dir).get(rel))
+      if (isFileRef(entry) && !isPartitionRef(entry)) {
+        if (fileTouched(entry.substring(dir.length + 1))) touched += entry else untouched += entry
       } else {
-        val files = FileStats.listLeafDataFiles(fs, dirP)
-        val (t, u) = files.partition(fileTouched)
-        if (t.isEmpty) untouched += entry // whole dir survives as-is
+        // a whole dir or a partition subtree: classify its leaf files
+        // against the dir's sidecar (a subtree ref's suffix is their
+        // key prefix)
+        val prefix = if (entry == dir) "" else entry.substring(dir.length + 1) + "/"
+        val (t, u) = FileStats.listLeafDataFiles(fs, new Path(rootP, entry))
+          .map(prefix + _).partition(fileTouched)
+        if (t.isEmpty) untouched += entry // whole dir/subtree survives as-is
         else {
           untouched ++= u.map(f => s"$dir/$f")
           touched ++= t.map(f => s"$dir/$f")
         }
       }
     }
-    Some((untouched.result(), touched.result()))
+    (untouched.result(), touched.result())
   }
 
   /** Read the newest snapshot OPENING ONLY the files whose `col`
@@ -1906,16 +1734,6 @@ object VersionedTable {
     }
     kept.result()
   }
-
-  /** Thrown by [[commitDelta]] when `expectedVersion` was given and the
-    * table has moved past it: the caller's delta was derived from a
-    * stale base and must be re-derived against `actual` before retrying
-    * (the delta directory was NOT published — nothing to clean up).
-    */
-  final case class VersionConflictException(root: String, expected: Long, actual: Long)
-    extends RuntimeException(
-      s"versioned table at $root moved: delta was derived from v$expected but the " +
-        s"table is at v$actual — re-derive the delta against the current version and retry")
 
   /** One committed version in [[history]]: its number, the manifest
     * pointer's modification time (= publish instant), and the data
@@ -1979,28 +1797,26 @@ object VersionedTable {
     // and compacting a json table as parquet would fail (worse, it
     // used to record the wrong format before failing)
     val fmt = resolveFormat(spark, root, format)
-    val snap = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version to compact"))
-    // a snapshot holding FILE references (commitMerge carry-overs) is
-    // always worth compacting: it pins whole parent dirs alive in
-    // vacuum for the sake of a subset of their files
-    if (snap.dataDirs.length <= 1 && zorderBy.isEmpty && !snap.dataDirs.exists(isFileRef))
-      snap.version
-    else {
-      val v = commit(spark, root, fmt,
-        base => {
-          val b = base.getOrElse(throw new IllegalStateException(
-            s"versioned table at $root vanished mid-compaction"))
+    val (fs, rootP) = fsFor(spark, root)
+    // a table with a LIVE catalog face keeps it current automatically —
+    // otherwise a later vacuum would delete directories the stale view
+    // still globs, breaking spark.table(name) until the next pipeline
+    // write
+    ManifestTxn.commit(spark, root, "versioned compaction", Some(fmt), sync = true) { snap =>
+      val s = snap.getOrElse(throw new IllegalArgumentException(
+        s"versioned table at $root has no committed version to compact"))
+      // a snapshot holding FILE references (commitMerge carry-overs) is
+      // always worth compacting: it pins whole parent dirs alive in
+      // vacuum for the sake of a subset of their files
+      if (s.dataDirs.length <= 1 && zorderBy.isEmpty && !s.dataDirs.exists(isFileRef))
+        NoOp(s.version)
+      else {
+        val b = load(spark, rootP, fmt, s.dataDirs)
+        rewrite(spark, fs, rootP, fmt, snap,
           if (zorderBy.isEmpty) b
-          else graft.operators.ZOrder.cluster(b, zorderBy, zorderFiles, within = partitionBy)
-        },
-        partitionBy, commitKind = "compact")
-      // a table with a LIVE catalog face keeps it current automatically —
-      // otherwise a later vacuum would delete directories the stale
-      // view still globs, breaking spark.table(name) until the next
-      // pipeline write
-      syncIfLinked(spark, root)
-      v
+          else graft.operators.ZOrder.cluster(b, zorderBy, zorderFiles, within = partitionBy),
+          partitionBy, "compact")
+      }
     }
   }
 
@@ -2041,7 +1857,7 @@ object VersionedTable {
     * defaulting to parquet against a json table) cannot poison the
     * marker.
     */
-  private def recordFormat(fs: FileSystem, rootP: Path, format: String): Unit = {
+  private[pipeline] def recordFormat(fs: FileSystem, rootP: Path, format: String): Unit = {
     val marker = new Path(new Path(rootP, ManifestDir), FormatMarker)
     if (!fs.exists(marker)) casPublish(fs, marker, format)
   }
@@ -2128,7 +1944,7 @@ object VersionedTable {
     * a deliberately-dropped view or wedge every future vacuum on a
     * CREATE OR REPLACE VIEW that can never succeed.
     */
-  private def syncIfLinked(spark: SparkSession, root: String): Unit = {
+  private[pipeline] def syncIfLinked(spark: SparkSession, root: String): Unit = {
     if (branchOf(root).nonEmpty) return // catalog views track main only
     val (fs, rootP) = fsFor(spark, root)
     catalogFace(fs, rootP).foreach { case (name, fmt) =>
@@ -2142,12 +1958,6 @@ object VersionedTable {
     }
   }
 
-  /** Retire history: keep the newest `keep` versions' pointers and data
-    * directories; delete older pointers, then any `data-*` directory
-    * that no surviving pointer references and whose modification time
-    * is older than `graceMs` (the grace period protects a LIVE
-    * committer's private directory, which has no pointer yet).
-    */
   /** RESTORE: republish `toVersion`'s exact entry set (and layout) as
     * a NEW commit — time-travel rollback with ZERO data I/O (the
     * target's immutable dirs carry over by reference; nothing is
@@ -2163,80 +1973,64 @@ object VersionedTable {
     * (returns the current version) when the table is already at the
     * target's entry set.
     */
-  def restore(spark: SparkSession, root: String, toVersion: Long,
-              maxAttempts: Int = 5): Long =
-    restoreHooked(spark, root, toVersion, maxAttempts, () => ())
-
-  /** [[restore]] with a test seam: `afterValidate` runs between the
-    * target-dirs liveness check and the pointer CAS, so a test can
-    * interleave a racing vacuum deterministically.
-    */
-  private[graft] def restoreHooked(spark: SparkSession, root: String, toVersion: Long,
-                                   maxAttempts: Int, afterValidate: () => Unit): Long = {
+  def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     val (fs, rootP) = fsFor(spark, root)
-    val targetPath = new Path(mdirOf(rootP, root), f"v$toVersion%010d")
-    val content = readSmall(fs, targetPath).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version $toVersion " +
-        "(never committed, or already vacuumed) — nothing to restore to"))
-    val targetDirs = parseDirs(content)
-    // Pre-marker manifests carry NO layout line: the restored pointer
-    // must preserve that absence ("unknown, detect by walking"), not
-    // coerce it to an explicit-flat marker that would make a later
-    // layout-aware rewrite silently flatten a legacy hive table.
-    val targetLayoutPart = parseLayout(content).map(layoutLine).getOrElse("")
-    val targetTops = targetDirs.map(entryDir).distinct
+    val target = pointerAt(fs, mdirOf(rootP, root), toVersion).getOrElse(
+      throw new IllegalArgumentException(
+        s"versioned table at $root has no committed version $toVersion " +
+          "(never committed, or already vacuumed) — nothing to restore to"))
+    val targetTops = target.entries.map(entryDir).distinct
     val gone = missingDirs(spark, root, targetTops)
     require(gone.isEmpty,
       s"cannot restore $root to v$toVersion: data dirs ${gone.mkString(", ")} were " +
         "already vacuumed — restore only reaches versions within the vacuum retention")
-    afterValidate()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val snap = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
-        s"versioned table at $root has no committed version"))
-      if (snap.dataDirs == targetDirs) return snap.version // already there: no churn
-      val next = snap.version + 1
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          (targetDirs :+ s"#kind=restore").mkString("\n") + targetLayoutPart)) {
-        // TOCTOU re-check: a vacuum that computed its referenced set
-        // BEFORE this pointer landed can have swept the target's dirs
-        // between validation and publish (they were outside its keep
-        // window and too old for the grace period). This NARROWS the
-        // race to the sub-second span between this re-check and an
-        // in-flight sweep's final deletions — vacuum's own pre-sweep
-        // re-listing (see vacuum) covers that side; full closure
-        // would need a coordination primitive the protocol
-        // deliberately omits (Delta documents the same RESTORE/VACUUM
-        // hazard). On detection, roll the table FORWARD to the
-        // pre-restore snapshot (its dirs are the newest-kept set,
-        // alive by vacuum's own retention) and refuse loudly.
-        val swept = missingDirs(spark, root, targetTops)
-        if (swept.isEmpty) {
-          syncIfLinked(spark, root)
-          return next
-        }
-        val preLayoutPart = currentLayoutOf(fs, mdirOf(rootP, root), snap.version).map(layoutLine).getOrElse("")
-        // The heal must actually LAND: loop its CAS against the moving
-        // head. A concurrent commit built on the dangling restore head
-        // is poisoned regardless (its pointer copied the swept
-        // entries) — rolling forward to the pre-restore snapshot is
-        // the best consistent state available; the thrown message
-        // reports honestly which outcome happened.
-        var healed = false
-        var healTry = 0
-        while (!healed && healTry < maxAttempts) {
-          healTry += 1
-          val cur = currentSnapshot(spark, root)
-          cur match {
-            case Some(c) if c.dataDirs == snap.dataDirs => healed = true
-            case Some(c) =>
-              healed = casPublish(fs,
-                new Path(mdirOf(rootP, root), f"v${c.version + 1}%010d"),
-                (snap.dataDirs :+ s"#kind=restore").mkString("\n") + preLayoutPart)
-            case None => healTry = maxAttempts
-          }
-        }
+    // Pre-marker manifests carry NO layout line: the restored pointer
+    // preserves that absence ("unknown, detect by walking"), not an
+    // explicit-flat marker that would make a later layout-aware rewrite
+    // silently flatten a legacy hive table.
+    def restoreTo(entries: Seq[String], layout: Option[Seq[String]])
+                 (snap: Option[Snapshot]): ManifestTxn.Step = snap match {
+      case None => throw new IllegalArgumentException(
+        s"versioned table at $root has no committed version")
+      case Some(s) if s.dataDirs == entries => NoOp(s.version) // already there: no churn
+      case Some(_) => Publish(Pointer(entries, Some("restore"), layout))
+    }
+    var pre: Option[Snapshot] = None // the snapshot the winning publish replaced
+    val v = ManifestTxn.commit(spark, root, "restore") { snap =>
+      val step = restoreTo(target.entries, target.layout)(snap)
+      pre = step match { case _: Publish => snap; case _ => None }
+      step
+    }
+    pre.fold(v) { snap =>
+      // TOCTOU re-check: a vacuum that computed its referenced set
+      // BEFORE this pointer landed can have swept the target's dirs
+      // between validation and publish (they were outside its keep
+      // window and too old for the grace period). This NARROWS the race
+      // to the sub-second span between this re-check and an in-flight
+      // sweep's final deletions — vacuum's own pre-sweep re-listing (see
+      // vacuum) covers that side; full closure would need a
+      // coordination primitive the protocol deliberately omits (Delta
+      // documents the same RESTORE/VACUUM hazard). On detection, roll
+      // the table FORWARD to the pre-restore snapshot (its dirs are the
+      // newest-kept set, alive by vacuum's own retention) and refuse
+      // loudly.
+      val swept = missingDirs(spark, root, targetTops)
+      if (swept.isEmpty) {
+        syncIfLinked(spark, root)
+        v
+      } else {
+        // The heal commits against the moving head like any commit. A
+        // concurrent commit built on the dangling restore head is
+        // poisoned regardless (its pointer copied the swept entries) —
+        // rolling forward to the pre-restore snapshot is the best
+        // consistent state available; the thrown message reports
+        // honestly which outcome happened.
+        val preLayout = pointerAt(fs, mdirOf(rootP, root), snap.version).flatMap(_.layout)
+        val healed =
+          try {
+            ManifestTxn.commit(spark, root, "restore heal")(restoreTo(snap.dataDirs, preLayout))
+            true
+          } catch { case scala.util.control.NonFatal(_) => false }
         syncIfLinked(spark, root)
         throw new IllegalStateException(
           s"restore of $root to v$toVersion raced a vacuum: data dirs " +
@@ -2251,17 +2045,8 @@ object VersionedTable {
             "Raise the vacuum keep window to cover restore targets, or run " +
             "restore and vacuum from one maintenance process")
       }
-      // pointer-only race loss: re-read the winner and retry
     }
-    throw new IllegalStateException(
-      s"restore of $root to v$toVersion lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff")
   }
-
-  /** The `#layout=` marker of `version`'s manifest, if readable. */
-  private def currentLayoutOf(fs: FileSystem, mdir: Path, version: Long): Option[Seq[String]] =
-    readSmall(fs, new Path(mdir, f"v$version%010d"))
-      .flatMap(parseLayout)
 
   /** CREATE BRANCH: a zero-copy writable clone of `fromVersion` (or
     * the current snapshot) — Iceberg's branch / Delta's shallow-clone
@@ -2290,33 +2075,21 @@ object VersionedTable {
                    fromVersion: Option[Long] = None): Long = {
     val bRoot = branchRoot(root, name) // validates name + rejects branch-of-branch
     val (fs, rootP) = fsFor(spark, root)
-    val mainM = mdirOf(rootP, root)
     val v = fromVersion.getOrElse(currentSnapshot(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"versioned table at $root has no committed version — nothing to branch")).version)
-    val content = readSmall(fs, new Path(mainM, f"v$v%010d")).getOrElse(
+    val fork = pointerAt(fs, mdirOf(rootP, root), v).getOrElse(
       throw new IllegalArgumentException(
         s"versioned table at $root has no committed version $v " +
           "(never committed, or already vacuumed) — nothing to branch from"))
-    val dirs = parseDirs(content)
-    val layoutPart = parseLayout(content).map(layoutLine).getOrElse("")
-    val tops = dirs.map(entryDir).distinct
+    val tops = fork.entries.map(entryDir).distinct
     val gone = missingDirs(spark, root, tops)
     require(gone.isEmpty,
       s"cannot branch $root at v$v: data dirs ${gone.mkString(", ")} were already " +
         "vacuumed — branch only from versions within the vacuum retention")
-    val bm = mdirOf(rootP, bRoot)
-    fs.mkdirs(bm)
-    if (!casPublish(fs, new Path(bm, "v0000000001"),
-        (dirs :+ "#kind=branch" :+ s"#fork=$v").mkString("\n") + layoutPart)) {
-      // a failed CAS is "already exists" ONLY when the pointer is
-      // actually there — a transient store error during the atomic
-      // create must surface as retryable, not as a duplicate name
-      if (fs.exists(new Path(bm, "v0000000001")))
-        throw new IllegalArgumentException(s"branch '$name' already exists at $root")
-      throw new IllegalStateException(
-        s"createBranch('$name') at $root: the atomic pointer publish failed but no " +
-          "branch exists — transient storage error; retry the create")
+    val created = ManifestTxn.commit(spark, bRoot, "createBranch") {
+      case Some(_) => throw new IllegalArgumentException(s"branch '$name' already exists at $root")
+      case None => Publish(Pointer(fork.entries, Some("branch"), fork.layout, fork = Some(v)))
     }
     // TOCTOU re-check (restore's hazard, simpler remedy): a vacuum that
     // computed its referenced set before this pointer landed may have
@@ -2326,14 +2099,14 @@ object VersionedTable {
     // already serialized.
     val swept = missingDirs(spark, root, tops)
     if (swept.nonEmpty) {
-      fs.delete(bm, true)
+      fs.delete(mdirOf(rootP, bRoot), true)
       throw new IllegalStateException(
         s"createBranch('$name') of $root raced a vacuum: data dirs " +
           s"${swept.mkString(", ")} were swept after validation — the branch was " +
           "removed. Raise the vacuum keep window to cover branch fork points, or " +
           "run branching and vacuum from one maintenance process")
     }
-    1L
+    created
   }
 
   /** Names of the table's branches (empty when none exist). */
@@ -2376,41 +2149,30 @@ object VersionedTable {
     * last-writer-wins).
     */
   def publishBranch(spark: SparkSession, root: String, name: String,
-                    maxAttempts: Int = 5, force: Boolean = false): Long = {
+                    force: Boolean = false): Long = {
     require(branchOf(root).isEmpty, s"publish targets the main root, got: $root")
     val bRoot = branchRoot(root, name)
     val (fs, rootP) = fsFor(spark, root)
     val bSnap = currentSnapshot(spark, bRoot).getOrElse(throw new IllegalArgumentException(
       s"branch '$name' of $root has no committed version — nothing to publish"))
     val fork: Option[Long] = latestFork(fs, mdirOf(rootP, bRoot))
-    val layoutPart = currentLayoutOf(fs, mdirOf(rootP, bRoot), bSnap.version)
-      .map(layoutLine).getOrElse("")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val main = currentSnapshot(spark, root)
-      if (main.exists(_.dataDirs == bSnap.dataDirs)) return main.get.version
-      if (!force) fork.foreach { f =>
-        val head = main.map(_.version).getOrElse(0L)
-        if (head != f) throw new IllegalStateException(
-          s"publish of branch '$name' at $root refused: main advanced past the " +
-            s"fork point (forked at v$f, head is v$head) — publishing would " +
-            "silently revert commits the branch audit never saw. Re-audit against " +
-            "the CURRENT main (branchDiff / GRAFT_BRANCH_DIFF) and either " +
-            "re-branch, or publish with force=true (SQL: GRAFT_PUBLISH(path, " +
-            "name, FORCE)) to deliberately keep last-writer-wins")
+    val layout = pointerAt(fs, mdirOf(rootP, bRoot), bSnap.version).flatMap(_.layout)
+    ManifestTxn.commit(spark, root, s"publish of branch '$name'", sync = true) { main =>
+      if (main.exists(_.dataDirs == bSnap.dataDirs)) NoOp(main.get.version)
+      else {
+        if (!force) fork.foreach { f =>
+          val head = main.map(_.version).getOrElse(0L)
+          if (head != f) throw new IllegalStateException(
+            s"publish of branch '$name' at $root refused: main advanced past the " +
+              s"fork point (forked at v$f, head is v$head) — publishing would " +
+              "silently revert commits the branch audit never saw. Re-audit against " +
+              "the CURRENT main (branchDiff / GRAFT_BRANCH_DIFF) and either " +
+              "re-branch, or publish with force=true (SQL: GRAFT_PUBLISH(path, " +
+              "name, FORCE)) to deliberately keep last-writer-wins")
+        }
+        Publish(Pointer(bSnap.dataDirs, Some("rewrite"), layout))
       }
-      val next = main.map(_.version + 1).getOrElse(1L)
-      if (casPublish(fs, new Path(mdirOf(rootP, root), f"v$next%010d"),
-          (bSnap.dataDirs :+ "#kind=rewrite").mkString("\n") + layoutPart)) {
-        syncIfLinked(spark, root)
-        return next
-      }
-      // lost the pointer race to a concurrent main writer: re-read and retry
     }
-    throw new IllegalStateException(
-      s"publish of branch '$name' at $root lost the publish race $maxAttempts times — " +
-        "writer contention is pathological; retry with backoff")
   }
 
   /** REBASE branch `name` onto main's CURRENT head — the constructive
@@ -2441,65 +2203,73 @@ object VersionedTable {
     val (fs, rootP) = fsFor(spark, root)
     val bm = mdirOf(rootP, bRoot)
     val mainM = mdirOf(rootP, root)
-    val bSnap = currentSnapshot(spark, bRoot).getOrElse(throw new IllegalArgumentException(
-      s"branch '$name' of $root has no committed version — nothing to rebase"))
-    val main = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
-      s"versioned table at $root has no committed version — nothing to rebase onto"))
-    val forkV = latestFork(fs, bm).getOrElse(throw new UnsupportedOperationException(
-      s"branch '$name' of $root carries no fork marker (pre-guard branch) — rebase " +
-        "cannot determine its base; re-create the branch from the current main"))
-    if (forkV == main.version) return bSnap.version // already based on head
-    val baseDirs = dirsOf(fs, mainM, forkV).getOrElse(throw new IllegalStateException(
-      s"main's manifest v$forkV (the fork base of branch '$name') no longer exists " +
-        s"at $root (vacuumed) — cannot prove the branch span is append-only; " +
-        "audit with branchDiff and re-branch from the current main"))
-    val rewrote = baseDirs.filterNot(bSnap.dataDirs.contains)
-    if (rewrote.nonEmpty) throw new UnsupportedOperationException(
-      s"rebase of branch '$name' at $root refused: the branch span is not " +
-        s"append-only — fork-inherited entries were rewritten or deleted on the " +
-        s"branch (${rewrote.take(3).mkString(", ")}${if (rewrote.length > 3) ", …" else ""}). " +
-        "Replaying row-level changes onto a moved main is a semantic three-way " +
-        "merge: audit with branchDiff and re-apply the branch's intent on a " +
-        "fresh branch of the current main")
-    val bLayout = currentLayoutOf(fs, bm, bSnap.version)
-    val mLayout = currentLayoutOf(fs, mainM, main.version)
-    require(bLayout == mLayout,
-      s"rebase of branch '$name' at $root refused: the branch head's data layout " +
-        s"(${bLayout.getOrElse(Seq("flat")).mkString(",")}) differs from main's " +
-        s"(${mLayout.getOrElse(Seq("flat")).mkString(",")}) — a rebased snapshot " +
-        "would mix partition layouts")
-    // additions = branch entries beyond its base, MINUS anything main
-    // already holds (a published branch's entries are on main — naive
-    // replay would double-count them)
-    val adds = bSnap.dataDirs.filterNot(baseDirs.toSet).filterNot(main.dataDirs.toSet)
-    val newDirs = main.dataDirs ++ adds
-    if (newDirs == bSnap.dataDirs) return bSnap.version // content already in sync
-    val tops = newDirs.map(entryDir).distinct
-    val gone = missingDirs(spark, root, tops)
-    require(gone.isEmpty,
-      s"cannot rebase branch '$name' at $root: data dirs ${gone.mkString(", ")} " +
-        "were already vacuumed — re-branch from the current main")
-    val next = bSnap.version + 1
-    val content = (newDirs :+ "#kind=rewrite" :+ s"#fork=${main.version}")
-      .mkString("\n") + mLayout.map(layoutLine).getOrElse("")
-    if (!casPublish(fs, new Path(bm, f"v$next%010d"), content))
-      throw new IllegalStateException(
-        s"rebase of branch '$name' at $root lost a commit race on the branch " +
-          "pointer — a concurrent branch writer landed; re-run the rebase")
+    // every attempt re-runs the checks against the CURRENT branch head
+    // (a concurrent branch writer may have landed) and main head
+    var rebased: Option[(Snapshot, Seq[String])] = None // (pre-rebase head, adopted dirs)
+    val v = ManifestTxn.commit(spark, bRoot, s"rebase of branch '$name'") { snap =>
+      rebased = None
+      val bSnap = snap.getOrElse(throw new IllegalArgumentException(
+        s"branch '$name' of $root has no committed version — nothing to rebase"))
+      val main = currentSnapshot(spark, root).getOrElse(throw new IllegalArgumentException(
+        s"versioned table at $root has no committed version — nothing to rebase onto"))
+      val forkV = latestFork(fs, bm).getOrElse(throw new UnsupportedOperationException(
+        s"branch '$name' of $root carries no fork marker (pre-guard branch) — rebase " +
+          "cannot determine its base; re-create the branch from the current main"))
+      if (forkV == main.version) NoOp(bSnap.version) // already based on head
+      else {
+        val baseDirs = dirsOf(fs, mainM, forkV).getOrElse(throw new IllegalStateException(
+          s"main's manifest v$forkV (the fork base of branch '$name') no longer exists " +
+            s"at $root (vacuumed) — cannot prove the branch span is append-only; " +
+            "audit with branchDiff and re-branch from the current main"))
+        val rewrote = baseDirs.filterNot(bSnap.dataDirs.contains)
+        if (rewrote.nonEmpty) throw new UnsupportedOperationException(
+          s"rebase of branch '$name' at $root refused: the branch span is not " +
+            s"append-only — fork-inherited entries were rewritten or deleted on the " +
+            s"branch (${rewrote.take(3).mkString(", ")}" +
+            s"${if (rewrote.length > 3) ", …" else ""}). " +
+            "Replaying row-level changes onto a moved main is a semantic three-way " +
+            "merge: audit with branchDiff and re-apply the branch's intent on a " +
+            "fresh branch of the current main")
+        val bLayout = pointerAt(fs, bm, bSnap.version).flatMap(_.layout)
+        val mLayout = pointerAt(fs, mainM, main.version).flatMap(_.layout)
+        require(bLayout == mLayout,
+          s"rebase of branch '$name' at $root refused: the branch head's data layout " +
+            s"(${bLayout.getOrElse(Seq("flat")).mkString(",")}) differs from main's " +
+            s"(${mLayout.getOrElse(Seq("flat")).mkString(",")}) — a rebased snapshot " +
+            "would mix partition layouts")
+        // additions = branch entries beyond its base, MINUS anything main
+        // already holds (a published branch's entries are on main — naive
+        // replay would double-count them)
+        val adds = bSnap.dataDirs.filterNot(baseDirs.toSet).filterNot(main.dataDirs.toSet)
+        val newDirs = main.dataDirs ++ adds
+        if (newDirs == bSnap.dataDirs) NoOp(bSnap.version) // content already in sync
+        else {
+          val tops = newDirs.map(entryDir).distinct
+          val gone = missingDirs(spark, root, tops)
+          require(gone.isEmpty,
+            s"cannot rebase branch '$name' at $root: data dirs ${gone.mkString(", ")} " +
+              "were already vacuumed — re-branch from the current main")
+          rebased = Some((bSnap, tops))
+          Publish(Pointer(newDirs, Some("rewrite"), mLayout, fork = Some(main.version)))
+        }
+      }
+    }
     // TOCTOU re-check (createBranch's hazard): a vacuum that computed
     // its referenced set before this pointer landed may have swept
     // main-head dirs the rebase adopted — heal by restoring the branch
     // to its pre-rebase head (pointer-only) and refuse loudly.
-    val swept = missingDirs(spark, root, tops)
-    if (swept.nonEmpty) {
-      restore(spark, bRoot, bSnap.version)
-      throw new IllegalStateException(
-        s"rebase of branch '$name' at $root raced a vacuum: data dirs " +
-          s"${swept.mkString(", ")} were swept after validation — the branch was " +
-          "restored to its pre-rebase head. Raise the vacuum keep window, or run " +
-          "rebase and vacuum from one maintenance process")
+    rebased.foreach { case (bSnap, tops) =>
+      val swept = missingDirs(spark, root, tops)
+      if (swept.nonEmpty) {
+        restore(spark, bRoot, bSnap.version)
+        throw new IllegalStateException(
+          s"rebase of branch '$name' at $root raced a vacuum: data dirs " +
+            s"${swept.mkString(", ")} were swept after validation — the branch was " +
+            "restored to its pre-rebase head. Raise the vacuum keep window, or run " +
+            "rebase and vacuum from one maintenance process")
+      }
     }
-    next
+    v
   }
 
   /** What publishing branch `name` WOULD change on main — the AUDIT
@@ -2552,6 +2322,12 @@ object VersionedTable {
     stale.length
   }
 
+  /** Retire history: keep the newest `keep` versions' pointers and data
+    * directories; delete older pointers, then any `data-*` directory
+    * that no surviving pointer references and whose modification time
+    * is older than `graceMs` (the grace period protects a LIVE
+    * committer's private directory, which has no pointer yet).
+    */
   def vacuum(spark: SparkSession, root: String, keep: Int = 3,
              graceMs: Long = 3600L * 1000): Unit = {
     require(keep >= 1, "vacuum must keep at least the current version")
@@ -2576,7 +2352,7 @@ object VersionedTable {
       if (!fs.exists(broot)) Set.empty
       else fs.listStatus(broot).filter(_.isDirectory).toSeq.flatMap { b =>
         listManifests(fs, b.getPath).flatMap { case (v, p, _) =>
-          readSmall(fs, p).map(parseDirs).getOrElse(throw new IllegalStateException(
+          readSmall(fs, p).map(Pointer.parse(_).entries).getOrElse(throw new IllegalStateException(
             s"vacuum aborted: branch manifest v$v of '${b.getPath.getName}' at $root " +
               "is unreadable — re-run when the store is healthy (nothing was deleted)"))
             .map(entryDir)
@@ -2591,7 +2367,7 @@ object VersionedTable {
       val manifests = listManifests(fs, mdirOf(rootP, root)).map(m => (m._1, m._2)).sortBy(-_._1)
       val (kept, retired) = manifests.splitAt(keep)
       val referenced = kept.flatMap { case (v, p) =>
-        readSmall(fs, p).map(parseDirs).getOrElse(throw new IllegalStateException(
+        readSmall(fs, p).map(Pointer.parse(_).entries).getOrElse(throw new IllegalStateException(
           s"vacuum aborted: manifest v$v at $root is unreadable — " +
             "re-run when the store is healthy (nothing was deleted)"))
           // a FILE reference (commitMerge carry-over) keeps its whole

@@ -241,16 +241,17 @@ object Writer {
     }
   }
 
-  /** Versioned path sink: every write mode becomes a merge function
-    * over the current snapshot, committed through
-    * [[VersionedTable.commit]]'s optimistic-concurrency loop. The merge
-    * plans are the SAME distributed formulations as the in-place path
-    * modes; what changes is the commit: concurrent writers serialize
-    * (the loser re-merges against the winner's snapshot — drune gets
-    * this from Delta's transaction log, writer.py:40-100), and because
-    * version directories are immutable there is no
-    * read-what-you-overwrite hazard — no checkpoint materialization,
-    * no rename-swap window.
+  /** Versioned path sink: every write mode commits through the manifest
+    * format's one optimistic loop (append via commitDelta; merge,
+    * overwrite_partition and overwrite_where via their pruned commits;
+    * the rest as a merge function over the snapshot via commit). The
+    * merge plans are the SAME distributed formulations as the in-place
+    * path modes; what changes is the commit: concurrent writers
+    * serialize (the loser re-derives against the winner's snapshot, up
+    * to 20 lost races — drune gets this from Delta's transaction log,
+    * writer.py:40-100), and because version directories are immutable
+    * there is no read-what-you-overwrite hazard — no checkpoint
+    * materialization, no rename-swap window.
     */
   private def versionedWrite(spark: SparkSession, df: DataFrame, sink: SinkSpec): Unit = {
     // Flipping `versioned: true` on a path that already holds PLAIN
@@ -303,8 +304,7 @@ object Writer {
         // definition in touched files), the rest carry over in the
         // manifest by reference. O(touched + source) instead of
         // O(table) — the commit-cost shape a 100 TB merge requires.
-        // Unprunable layouts (hive-partitioned, stats-less) fall back
-        // to the full rewrite inside commitMerge.
+        // Files without stats classify touched and rewrite.
         VersionedTable.commitMerge(spark, sink.path, sink.format, df,
           keys = Seq("hash_key"),
           merge = (touched, src) => clustered(upsert(src, Some(touched))),

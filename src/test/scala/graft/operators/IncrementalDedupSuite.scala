@@ -133,7 +133,7 @@ class IncrementalDedupSuite extends SparkSpec {
     val deltaB = Seq((9002L, newText)).toDF("doc_id", "text")
 
     // B runs fully inside A's read→commit window: A deduped against v1,
-    // B commits v2, A's expectedVersion=1 commit conflicts, A re-checks
+    // B commits v2, A's commit attempt finds v2 instead of v1, re-checks
     // against ONLY B's admitted rows and drops its copy.
     var resB: IncrementalDedup.DeltaDedup = null
     val resA = IncrementalDedup.dedupeDeltaHooked(

@@ -28,11 +28,11 @@ class CommitStressSuite extends SparkSpec {
           try {
             (0 until per).foreach { i =>
               val id = (w * per + i).toLong
-              // generous maxAttempts: 8-way pointer contention loses
-              // the CAS often; every loss must retry and land
+              // 8-way pointer contention loses the CAS often; every
+              // loss must retry and land within the commit loop's cap
               VersionedTable.commitDelta(spark, root, "parquet",
                 Seq((id, s"w${w}_c$i")).toDF("id", "v"),
-                compactAfter = Int.MaxValue, maxAttempts = 200)
+                compactAfter = Int.MaxValue)
             }
           } catch { case t: Throwable => failures.add(t) }
           finally latch.countDown()
@@ -71,10 +71,10 @@ class CommitStressSuite extends SparkSpec {
     task((0 until 5).foreach { i =>
       VersionedTable.commitDelta(spark, root, "parquet",
         Seq((1000L + i, "app")).toDF("id", "v"),
-        compactAfter = Int.MaxValue, maxAttempts = 200)
+        compactAfter = Int.MaxValue)
     })
-    task(VersionedTable.commitDelete(spark, root, "id < 10", maxAttempts = 200))
-    task(VersionedTable.commitDelete(spark, root, "id >= 90 AND id < 100", maxAttempts = 200))
+    task(VersionedTable.commitDelete(spark, root, "id < 10"))
+    task(VersionedTable.commitDelete(spark, root, "id >= 90 AND id < 100"))
     latch.await()
     pool.shutdown()
     assert(failures.isEmpty, s"writer failed: ${Option(failures.peek()).map(_.getMessage)}")

@@ -81,11 +81,15 @@ class RestoreSuite extends SparkSpec {
       Seq((2L, "b")).toDF("id", "v"), compactAfter = Int.MaxValue)
     // compact so v1/v2's delta dirs become unreferenced by the head
     VersionedTable.compact(spark, root)
-    val e = intercept[IllegalStateException] {
-      VersionedTable.restoreHooked(spark, root, 1L, maxAttempts = 5,
-        // the racing vacuum lands AFTER validation, BEFORE the CAS
-        afterValidate = () => VersionedTable.vacuum(spark, root, keep = 1, graceMs = 0L))
-    }
+    // the racing vacuum lands AFTER validation, BEFORE the CAS (once:
+    // the heal's commit passes the seam too)
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    ManifestTxn.beforeCas = (table, _) =>
+      if (table == root && armed.getAndSet(false))
+        VersionedTable.vacuum(spark, root, keep = 1, graceMs = 0L)
+    val e =
+      try intercept[IllegalStateException](VersionedTable.restore(spark, root, 1L))
+      finally ManifestTxn.beforeCas = null
     assert(e.getMessage.contains("raced a vacuum"), s"unexpected: ${e.getMessage}")
     // the table healed forward: current head readable, pre-restore rows
     val ids = VersionedTable.read(spark, root).select("id").as[Long].collect().sorted.toSeq
